@@ -89,9 +89,8 @@ object Bench {
       // 32.3 s, r16 A/B with the raw arm at LOWER ambient load) — the
       // checksummed FileContext stays.
       // AQE partition-coalescing dials, pinned EXPLICITLY at the Spark
-      // defaults after a measured three-arm A/B (r16;
-      // SPARK_GRAFT_PARALLELISM_FIRST / SPARK_GRAFT_ADVISORY override,
-      // both echoed in the env audit). parallelismFirst=true IS already
+      // defaults after a measured three-arm A/B (r16; both echoed in the
+      // env audit). parallelismFirst=true IS already
       // the byte-derived rule of guide §2.2 — the coalescer targets
       // max(shuffled-bytes/parallelism, 1 MB), so the catalog's tiny
       // exchanges land at 1-5 reduce tasks today. Respecting the 64 MB
@@ -103,10 +102,8 @@ object Bench {
       // (false, 4m), while only the many-exchange ANN composites
       // improved. The small-bytes/dense-CPU regime is exactly where the
       // advisory misleads; at warehouse bytes the two settings converge.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("graft.sort.results", "false")

@@ -19,7 +19,7 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,12 +41,6 @@ object PlanDump {
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_FILE_IMPL",
           "org.apache.hadoop.fs.RawLocalFileSystem"))
-      // AQE coalescing dials pinned at Spark defaults, in lockstep with
-      // Bench (see Bench.scala for the measured three-arm A/B)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

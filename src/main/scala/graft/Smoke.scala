@@ -31,12 +31,6 @@ object Smoke {
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_FILE_IMPL",
           "org.apache.hadoop.fs.RawLocalFileSystem"))
-      // AQE coalescing dials pinned at Spark defaults, in lockstep with
-      // Bench (see Bench.scala for the measured three-arm A/B)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -17,7 +17,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val repeats = if (args.length > 1) args(1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -32,12 +32,6 @@ object StageProfile {
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_FILE_IMPL",
           "org.apache.hadoop.fs.RawLocalFileSystem"))
-      // AQE coalescing dials pinned at Spark defaults, in lockstep with
-      // Bench (see Bench.scala for the measured three-arm A/B)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -105,27 +105,133 @@ object VectorOps {
     graft.functions.VectorDot(
       org.apache.spark.sql.SparkSession.active, a, b)
 
+  // ---- Probe-and-rank kernel ----------------------------------------
+  // Every ANN search path below is composed from these steps, so a
+  // change to probing, ranking, ADC scoring or a serving/recall tail is
+  // a change to one function. Tie-breaks are fixed here: cells by
+  // (cell_sim desc, cell asc), neighbors by (sim desc, neighbor_id asc);
+  // ranks restart per q_id. KernelTieBreakSpec pins all three.
+
+  /** The query frame (q_id, q_emb, carry…): vectors with vec_id <
+    * [[NQueries]], their `emb` column as the query vector.
+    */
+  private def queries(e: DataFrame, emb: String = "embedding",
+      carry: Seq[String] = Nil): DataFrame =
+    e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("q_id") +: col(emb).as("q_emb") +:
+        carry.map(col): _*)
+
+  /** Rounded cosine of the query vector against a vector column (unit
+    * norm, so cosine = dot). */
+  private def qSim(emb: String): Column =
+    F.roundHalfUp(dot(col("q_emb"), col(emb)), 6)
+
+  /** Exact brute-force cosine frame (q_id, neighbor_id, cos_sim): every
+    * query against every corpus vector except itself — the query side
+    * broadcast, the corpus scanned once and never shuffled.
+    */
+  private def exactSims(corpus: DataFrame, q: DataFrame,
+      emb: String = "embedding"): DataFrame =
+    corpus.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        qSim(emb).as("cos_sim"))
+
+  /** Each query's `nprobe` best cells of a coarse quantizer `cents`
+    * (`cell`, centroid): centroid similarity, then [[bestCells]].
+    * Output (q_id, q_emb, `cell`, cell_sim).
+    */
+  private[graft] def probeCells(q: DataFrame, cents: DataFrame,
+      cell: String, nprobe: Int): DataFrame =
+    bestCells(q.crossJoin(broadcast(cents))
+      .select(col("q_id"), col("q_emb"), col(cell),
+        qSim("centroid").as("cell_sim")), cell, nprobe)
+
+  /** Keep the `nprobe` rows per q_id with the highest cell_sim, ties to
+    * the smaller `cell` id.
+    */
+  private def bestCells(f: DataFrame, cell: String, nprobe: Int): DataFrame =
+    f.withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(desc("cell_sim"), asc(cell))))
+      .filter(col("rn") <= nprobe)
+      .drop("rn")
+
+  /** Per-query `rank` by (`sim` desc, neighbor_id asc); `k` keeps the
+    * top k, None keeps every candidate ranked.
+    */
+  private[graft] def ranked(
+      f: DataFrame, sim: String, k: Option[Int] = None): DataFrame = {
+    val r = f.withColumn("rank", row_number().over(
+      Window.partitionBy(col("q_id")).orderBy(desc(sim), asc("neighbor_id"))))
+    k.fold(r)(n => r.filter(col("rank") <= n))
+  }
+
+  /** ADC scoring of candidate code rows already joined to the broadcast
+    * per-query LUT ([[pqLut]]): the partials sum decimal-exact per
+    * (q_id, carry…, neighbor) into `approx_sim`, ranked unbounded.
+    */
+  private def adcRanked(joined: DataFrame, carry: String*): DataFrame =
+    ranked(joined
+      .groupBy(col("q_id") +: carry.map(col) :+ col("vec_id").as("neighbor_id"): _*)
+      .agg(F.sumDecAsDouble(col("part"), 10).as("approx_sim")), "approx_sim")
+
+  /** The IVF-PQ serving tail: the top [[TopKPq]] of a ranked search in
+    * the output column order, plus an optional provenance label
+    * ([[fromDelta]], [[fromBatch]]).
+    */
+  private[graft] def served(r: DataFrame, label: Column*): DataFrame =
+    Out.sorted(r.filter(col("rank") <= TopKPq)
+      .select(Seq("q_id", "cell", "cell_sim", "rank", "neighbor_id",
+        "approx_sim").map(col) ++ label: _*))(col("q_id"), col("rank"))
+
+  /** Neighbors that entered through the single add batch. */
+  private def fromDelta: Column =
+    (col("neighbor_id") % AddModulus === AddResidue).as("from_delta")
+
+  /** Which add batch a neighbor arrived in: 0 = built in, 1 or 2. */
+  private[graft] def fromBatch: Column =
+    when(col("neighbor_id") % AddModulus === AddResidue, 1)
+      .when(col("neighbor_id") % AddModulus === AddResidue2, 2)
+      .otherwise(0).as("from_batch")
+
+  /** Recall@k tail: per query, the measured exact-set size `n_exact`
+    * (< k when the corpus has fewer than k+1 non-self vectors — a
+    * constant-k denominator would understate recall), then for each
+    * (suffix, approximate (q_id, neighbor_id) frame) the hits of the
+    * exact set it recovers and their rounded share.
+    */
+  private def recallOf(
+      exact: DataFrame, approx: (String, DataFrame)*): DataFrame = {
+    val joined = approx.foldLeft(
+      exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))) {
+      case (acc, (s, a)) =>
+        acc.join(exact.join(a, Seq("q_id", "neighbor_id"), "left_semi")
+          .groupBy("q_id").agg(count(lit(1)).as(s"hits$s")), Seq("q_id"), "left")
+    }
+    val counted = joined.select(col("q_id") +: col("n_exact") +:
+      approx.map { case (s, _) =>
+        coalesce(col(s"hits$s"), lit(0L)).as(s"hits$s") }: _*)
+    approx.foldLeft(counted) { case (acc, (s, _)) =>
+      acc.withColumn(s"recall$s", F.roundHalfUp(col(s"hits$s").cast("double") /
+        col("n_exact").cast("double"), 6))
+    }
+  }
+
+  // ---- ANN search ladder ---------------------------------------------
+
   /** ANN baseline — exact brute-force cosine top-k: for each query vector
     * (vec_id < [[NQueries]]) the [[TopK]] nearest neighbors by cosine
     * (vectors are unit-norm, so cosine = dot).
     */
   def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
     val e = embDistributed(spark, dir)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val sims = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    val r = ranked(exactSims(e, queries(e)), "cos_sim", Some(TopK))
       .select("q_id", "rank", "neighbor_id", "cos_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
   }
 
-  /** IVF probe depth (cells searched per query) and in-cell k. */
+  /** Neighbors returned per query by the IVF paths (the in-cell k).
+    * The probe depth is the `nprobe` argument: 1, or [[IvfNProbe]]. */
   val TopKIvf = 5
 
   /** Cosine threshold for embedding near-duplicate pairs. */
@@ -285,11 +391,8 @@ object VectorOps {
       .select(col("vec_id"), col("embedding"),
         bucketOfN(col("embedding"), nPlanes).as("bucket"))
       .repartition(par, col("bucket"))
-    val probeList = array(
-      col("bucket") +: (0 until nPlanes).map(p =>
-        col("bucket").bitwiseXOR(lit(1L << p))): _*)
     val probes = b.select(col("vec_id"), col("embedding"),
-      explode(probeList).as("probe_bucket"))
+      explode(hamming1Probes(col("bucket"), nPlanes)).as("probe_bucket"))
       .repartition(par, col("probe_bucket"))
     probes.as("x")
       .join(b.as("y"),
@@ -299,6 +402,15 @@ object VectorOps {
         col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
         F.roundHalfUp(dot(col("x.embedding"), col("y.embedding")), 6).as("cos_sim"))
   }
+
+  /** A bucket id followed by its Hamming-distance-1 neighbors over the
+    * first `nPlanes` planes — the multi-probe list of the batch
+    * candidate join and of the streaming admission
+    * ([[graft.streaming.StreamEmbed]]).
+    */
+  private[graft] def hamming1Probes(bucket: Column, nPlanes: Int): Column =
+    array(bucket +: (0 until nPlanes).map(p =>
+      bucket.bitwiseXOR(lit(1L << p))): _*)
 
   /** ANN scale path #2 — IVF (inverted-file) search: vectors are
     * assigned to coarse cells, a query ranks cells by centroid
@@ -336,25 +448,21 @@ object VectorOps {
     val centroids = comp.groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
         x => x.getField("c")).as("centroid"))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cell_sim"), asc("label"))
-    val probedCells = q.crossJoin(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("label"),
-        F.roundHalfUp(dot(col("q_emb"), col("centroid")), 6).as("cell_sim"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("label"), col("cell_sim"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = e.join(broadcast(probedCells), Seq("label"))
+    ivfSearch(e, probeCells(queries(e), centroids, "label", nprobe), "label")
+  }
+
+  /** In-cell exact search shared by the IVF paths: the corpus rows of
+    * each query's probed cells (the probed frame broadcast, so the
+    * corpus is scanned once and never shuffled), exact cosine,
+    * top-[[TopKIvf]] per query.
+    */
+  private def ivfSearch(
+      corpus: DataFrame, probed: DataFrame, cell: String): DataFrame = {
+    val sims = corpus.join(broadcast(probed), Seq(cell))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("label").as("cell"), col("cell_sim"),
-        col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= TopKIvf)
+      .select(col("q_id"), col(cell).as("cell"), col("cell_sim"),
+        col("vec_id").as("neighbor_id"), qSim("embedding").as("cos_sim"))
+    val r = ranked(sims, "cos_sim", Some(TopKIvf))
       .select("q_id", "cell", "cell_sim", "rank", "neighbor_id", "cos_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
   }
@@ -379,16 +487,12 @@ object VectorOps {
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val bucketed = embDistributed(spark, dir)
       .select(col("vec_id"), col("embedding"), bucketOf(col("embedding")).as("bucket"))
-    val q = bucketed.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("bucket"))
+    val q = queries(bucketed, carry = Seq("bucket"))
     val sims = bucketed.join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("bucket"), col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopKLsh)
+        qSim("embedding").as("cos_sim"))
+    val r = ranked(sims, "cos_sim", Some(TopKLsh))
       .select("q_id", "bucket", "rank", "neighbor_id", "cos_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
   }
@@ -966,28 +1070,8 @@ object VectorOps {
     */
   def annIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     val (centroids, assigned) = trainedIndex(spark, dir)
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cell_sim"), asc("cluster"))
-    val probedCells = q.crossJoin(broadcast(centroids))
-      .select(col("q_id"), col("q_emb"), col("cluster"),
-        F.roundHalfUp(dot(col("q_emb"), col("centroid")), 6).as("cell_sim"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= 1)
-      .select(col("q_id"), col("q_emb"), col("cluster"), col("cell_sim"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = assigned.select(col("vec_id"), col("embedding"), col("cluster"))
-      .join(broadcast(probedCells), Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cluster").as("cell"), col("cell_sim"),
-        col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= TopKIvf)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id", "cos_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    ivfSearch(assigned.select(col("vec_id"), col("embedding"), col("cluster")),
+      probeCells(queries(emb(spark, dir)), centroids, "cluster", 1), "cluster")
   }
 
   /** Quantization levels of the SQ8 path (8-bit codes). */
@@ -1036,16 +1120,7 @@ object VectorOps {
         when(span === 0d, mn)
           .otherwise(mn + floor((v - mn) / span * QLevels + lit(0.5)) * span / QLevels)
       }).as("deq"))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val sims = enc.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("deq")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    val r = ranked(exactSims(enc, queries(e, "emb"), "deq"), "cos_sim", Some(TopK))
       .select("q_id", "rank", "neighbor_id", "cos_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
   }
@@ -1130,30 +1205,6 @@ object VectorOps {
       assigned.select(col("vec_id"), col("sub"), col("cluster").as("code")))
   }
 
-  /** ANN scale path #4 — product quantization with asymmetric distance
-    * (IVFADC's scoring half, faiss PQ): the corpus is compressed to
-    * [[PqSubspaces]] small integer codes per vector (one per sub-vector,
-    * from a per-subspace Lloyd codebook), queries stay full-precision,
-    * and a candidate's score is the sum over subspaces of
-    * dot(query sub-vector, codebook centroid) — a lookup-table add, no
-    * full-width arithmetic per pair. At 100 TB this is the memory
-    * compression dial past [[annSq8]]: 64 floats (256 B) become 16
-    * byte-sized codes (16 B, 16×), the scan reads codes only, and the per-query work is a
-    * k×[[PqSubspaces]] lookup table plus one grouped add per candidate.
-    * (Composing with the [[trainedIndex]] cells — scan only the probed
-    * cell's codes — is IVF-PQ; the cell restriction is exactly
-    * [[annIvfTrained]]'s join.)
-    *
-    * Plan shape: codebooks are tiny (k × [[PqSubspaces]] rows) so the
-    * query LUT is a broadcast cross join; the corpus-side work is one
-    * join of the code table against the broadcast LUT and a
-    * (q_id, vec_id) sum — the corpus never shuffles full vectors.
-    *
-    * Determinism: LUT partials are rounded then summed as exact
-    * decimals (addition-order-proof), ranking ties break on neighbor
-    * id, and the oracle unrolls the identical per-subspace Lloyd
-    * chains — hash-exact despite double quantization.
-    */
   /** Sub-vector rows (vec_id, sub, embedding) — eagerly materialized:
     * they feed every Lloyd step and the code table (at warehouse scale
     * this frame is the written PQ index).
@@ -1188,18 +1239,35 @@ object VectorOps {
           dot(slice(col("q_emb"), col("sub") * PqSubDim + 1, lit(PqSubDim)),
             col("centroid")), 6).as("part"))
 
+  /** ANN scale path #4 — product quantization with asymmetric distance
+    * (IVFADC's scoring half, faiss PQ): the corpus is compressed to
+    * [[PqSubspaces]] small integer codes per vector (one per sub-vector,
+    * from a per-subspace Lloyd codebook), queries stay full-precision,
+    * and a candidate's score is the sum over subspaces of
+    * dot(query sub-vector, codebook centroid) — a lookup-table add, no
+    * full-width arithmetic per pair. At 100 TB this is the memory
+    * compression dial past [[annSq8]]: 64 floats (256 B) become 16
+    * byte-sized codes (16 B, 16×), the scan reads codes only, and the per-query work is a
+    * k×[[PqSubspaces]] lookup table plus one grouped add per candidate.
+    * (Composing with the [[trainedIndex]] cells — scan only the probed
+    * cell's codes — is IVF-PQ; the cell restriction is exactly
+    * [[annIvfTrained]]'s join.)
+    *
+    * Plan shape: codebooks are tiny (k × [[PqSubspaces]] rows) so the
+    * query LUT is a broadcast cross join; the corpus-side work is one
+    * join of the code table against the broadcast LUT and a
+    * (q_id, vec_id) sum — the corpus never shuffles full vectors.
+    *
+    * Determinism: LUT partials are rounded then summed as exact
+    * decimals (addition-order-proof), ranking ties break on neighbor
+    * id, and the oracle unrolls the identical per-subspace Lloyd
+    * chains — hash-exact despite double quantization.
+    */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val (cents, codes) = pqIndex(pqSubs(spark, dir))
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val lut = pqLut(q, cents)
-    val r = codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
-      .agg(F.sumDecAsDouble(col("part"), 10).as("approx_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(desc("approx_sim"), asc("neighbor_id"))))
+    val lut = pqLut(queries(emb(spark, dir)), cents)
+    val r = adcRanked(codes.join(broadcast(lut), Seq("sub", "code"))
+        .filter(col("vec_id") =!= col("q_id")))
       .filter(col("rank") <= TopKPq)
       .select("q_id", "rank", "neighbor_id", "approx_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
@@ -1244,12 +1312,8 @@ object VectorOps {
   val IvfNominalCells = 10L
 
   private[graft] def annIvfPqWithCeiling(
-      spark: SparkSession, dir: String, ceiling: Long): DataFrame = {
-    val r = ivfPqRanked(spark, dir, ceiling)
-      .filter(col("rank") <= TopKPq)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id", "approx_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
-  }
+      spark: SparkSession, dir: String, ceiling: Long): DataFrame =
+    served(ivfPqRanked(spark, dir, ceiling))
 
   /** The full approx-ranked IVF-PQ candidate frame (rank unbounded) —
     * [[annIvfPqWithCeiling]] cuts it at [[TopKPq]]; [[annIvfPqRerank]]
@@ -1259,16 +1323,7 @@ object VectorOps {
       spark: SparkSession, dir: String, ceiling: Long): DataFrame = {
     val (coarseCents, assigned) = trainedIndex(spark, dir)
     val (cents, codes) = pqIndex(pqSubs(spark, dir))
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cell_sim"), asc("cluster"))
-    val probed = q.crossJoin(broadcast(coarseCents))
-      .select(col("q_id"), col("q_emb"), col("cluster"),
-        F.roundHalfUp(dot(col("q_emb"), col("centroid")), 6).as("cell_sim"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= 1)
-      .select(col("q_id"), col("q_emb"), col("cluster"), col("cell_sim"))
+    val probed = probeCells(queries(emb(spark, dir)), coarseCents, "cluster", 1)
     val lut = pqLut(probed.select(col("q_id"), col("q_emb")), cents)
     val cand = assigned.select(col("vec_id"), col("cluster"))
       .join(broadcast(probed.select(col("q_id"), col("cluster"), col("cell_sim"))),
@@ -1284,15 +1339,8 @@ object VectorOps {
     val estCandidates =
       NQueries.toLong * 1L * math.max(1L, corpusRows / IvfNominalCells)
     val candSide = if (estCandidates <= ceiling) broadcast(cand) else cand
-    val r = codes.join(candSide, Seq("vec_id"))
-      .join(broadcast(lut), Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("cell"), col("cell_sim"),
-        col("vec_id").as("neighbor_id"))
-      .agg(F.sumDecAsDouble(col("part"), 10).as("approx_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(desc("approx_sim"), asc("neighbor_id"))))
-    r
+    adcRanked(codes.join(candSide, Seq("vec_id"))
+      .join(broadcast(lut), Seq("q_id", "sub", "code")), "cell", "cell_sim")
   }
 
   /** Candidates kept per query for the exact re-scoring pass of
@@ -1324,17 +1372,12 @@ object VectorOps {
       .filter(col("rank") <= RerankDepth)
       .select("q_id", "neighbor_id", "approx_sim")
     val e = emb(spark, dir)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val fetched = e.select(col("vec_id").as("neighbor_id"), col("embedding"))
       .join(broadcast(nominees), Seq("neighbor_id"))
-    val rr = fetched.join(broadcast(q), Seq("q_id"))
+    val rr = fetched.join(broadcast(queries(e)), Seq("q_id"))
       .select(col("q_id"), col("neighbor_id"), col("approx_sim"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val r = rr.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopKPq)
+        qSim("embedding").as("cos_sim"))
+    val r = ranked(rr, "cos_sim", Some(TopKPq))
       .select("q_id", "rank", "neighbor_id", "cos_sim", "approx_sim")
     Out.sorted(r)(col("q_id"), col("rank"))
   }
@@ -1373,10 +1416,7 @@ object VectorOps {
   def ivfPqIndexRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val base = indexBase(dir)
     ivfPqPersist(spark, dir, base)
-    val r = annIvfPqFromIndex(spark, dir, base)
-      .filter(col("rank") <= TopKPq)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id", "approx_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(annIvfPqFromIndex(spark, dir, base))
   }
 
   /** Digest-keyed index location under the JVM tmpdir (the
@@ -2013,6 +2053,15 @@ object VectorOps {
     }
   }
 
+  /** A stored lists table (vec_id, sub, code, cell): the partition
+    * column reads back via directory-name inference; the cast restores
+    * the stored assignment's int type exactly.
+    */
+  private def listsAt(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
+      .select(col("vec_id"), col("sub"), col("code"),
+        col("cell").cast("int").as("cell"))
+
   private[graft] def ivfPqCompact(
       spark: SparkSession, base: String, deltas: Seq[String]): Unit =
     withWriterLease(spark, base) {
@@ -2032,11 +2081,8 @@ object VectorOps {
     // it is a no-op that never touches the lists
     val dead = tombstones(spark, base)
     if (present.isEmpty && dead.isEmpty) return
-    def listsAt(path: String) = spark.read.parquet(path)
-      .select(col("vec_id"), col("sub"), col("code"),
-        col("cell").cast("int").as("cell"))
     val merged = ("lists" +: present)
-      .map(s => listsAt(s"$base/$s"))
+      .map(s => listsAt(spark, s"$base/$s"))
       .reduce(_ unionByName _)
     dead.map(t => merged.join(broadcast(t), Seq("vec_id"), "left_anti"))
       .getOrElse(merged)
@@ -2102,22 +2148,9 @@ object VectorOps {
     val presentDeltas = deltas.filter(s => committed(spark, s"$base/$s"))
     val coarseCents = spark.read.parquet(s"$base/centroids")
     val cents = spark.read.parquet(s"$base/codebooks")
-    // the partition column reads back via directory-name inference;
-    // cast restores the stored assignment's int type exactly
-    def listsAt(path: String) = spark.read.parquet(path)
-      .select(col("vec_id"), col("sub"), col("code"),
-        col("cell").cast("int").as("cell"))
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cell_sim"), asc("cluster"))
-    val probed = q.crossJoin(broadcast(coarseCents))
-      .select(col("q_id"), col("q_emb"), col("cluster"),
-        F.roundHalfUp(dot(col("q_emb"), col("centroid")), 6).as("cell_sim"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("cluster").as("cell"),
-        col("cell_sim"))
+    val probed =
+      probeCells(queries(emb(spark, dir)), coarseCents, "cluster", nprobe)
+        .withColumnRenamed("cluster", "cell")
     val lut = pqLut(
       probed.select(col("q_id"), col("q_emb")).dropDuplicates("q_id"),
       cents)
@@ -2126,7 +2159,7 @@ object VectorOps {
       .join(broadcast(probeKeys), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
     val unmasked = ("lists" +: presentDeltas)
-      .map(s => candOf(listsAt(s"$base/$s")))
+      .map(s => candOf(listsAt(spark, s"$base/$s")))
       .reduce(_ unionByName _)
     // tombstoned ids never reach the scorer: one broadcast anti-join
     // above the union (the DPP cell joins live below it, per scan).
@@ -2135,13 +2168,8 @@ object VectorOps {
     val cand = tombstones(spark, base)
       .map(t => unmasked.join(broadcast(t), Seq("vec_id"), "left_anti"))
       .getOrElse(unmasked)
-    cand.join(broadcast(lut), Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("cell"), col("cell_sim"),
-        col("vec_id").as("neighbor_id"))
-      .agg(F.sumDecAsDouble(col("part"), 10).as("approx_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(desc("approx_sim"), asc("neighbor_id"))))
+    adcRanked(cand.join(broadcast(lut), Seq("q_id", "sub", "code")),
+      "cell", "cell_sim")
   }
 
   /** INCREMENTAL-ADD round trip (q_ann_index_add) — the full faiss
@@ -2168,13 +2196,7 @@ object VectorOps {
     val baseCorpus = embBase(spark, dir)
     ivfPqPersistFrames(spark, baseCorpus, baseCorpus, base)
     ivfPqAdd(spark, dir, base)
-    val r = annIvfPqFromIndexWithDelta(spark, dir, base)
-      .filter(col("rank") <= TopKPq)
-      .withColumn("from_delta",
-        col("neighbor_id") % AddModulus === AddResidue)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim", "from_delta")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(annIvfPqFromIndexWithDelta(spark, dir, base), fromDelta)
   }
 
   /** Add-only steady-state row (q_ann_index_add_batch) — the
@@ -2197,13 +2219,7 @@ object VectorOps {
   def ivfPqIndexAddBatchRow(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureIndex(spark, dir, "addbatch", embBase(spark, dir))
     ivfPqAdd(spark, dir, base)
-    val r = annIvfPqFromIndexWithDelta(spark, dir, base)
-      .filter(col("rank") <= TopKPq)
-      .withColumn("from_delta",
-        col("neighbor_id") % AddModulus === AddResidue)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim", "from_delta")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(annIvfPqFromIndexWithDelta(spark, dir, base), fromDelta)
   }
 
   /** CHAINED adds (q_ann_index_add_chain) — the full continuous-ingest
@@ -2234,16 +2250,8 @@ object VectorOps {
       .filter(col("vec_id") % AddModulus === residue)
     ivfPqAddBatch(spark, dir, base, batch(AddResidue), "lists_delta_b1")
     ivfPqAddBatch(spark, dir, base, batch(AddResidue2), "lists_delta_b2")
-    val r = searchStored(spark, dir, base,
-        Seq("lists_delta_b1", "lists_delta_b2"))
-      .filter(col("rank") <= TopKPq)
-      .withColumn("from_batch",
-        when(col("neighbor_id") % AddModulus === AddResidue, 1)
-          .when(col("neighbor_id") % AddModulus === AddResidue2, 2)
-          .otherwise(0))
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim", "from_batch")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(searchStored(spark, dir, base,
+      Seq("lists_delta_b1", "lists_delta_b2")), fromBatch)
   }
 
   /** COMPACTION round trip (q_ann_index_compact) — the chain row's
@@ -2277,15 +2285,7 @@ object VectorOps {
     // drops or duplicates rows would fail the oracle), beside
     // IvfPqCompactSpec's files-untouched pin.
     ivfPqCompact(spark, base, Seq("lists_delta_b1", "lists_delta_b2"))
-    val r = searchStored(spark, dir, base, Nil)
-      .filter(col("rank") <= TopKPq)
-      .withColumn("from_batch",
-        when(col("neighbor_id") % AddModulus === AddResidue, 1)
-          .when(col("neighbor_id") % AddModulus === AddResidue2, 2)
-          .otherwise(0))
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim", "from_batch")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(searchStored(spark, dir, base, Nil), fromBatch)
   }
 
   /** Provenance stamp of the corpus an index was built from: path +
@@ -2334,10 +2334,7 @@ object VectorOps {
     */
   def ivfPqIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureSearchIndex(spark, dir)
-    val r = annIvfPqFromIndex(spark, dir, base)
-      .filter(col("rank") <= TopKPq)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id", "approx_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(annIvfPqFromIndex(spark, dir, base))
   }
 
   /** Probe-2 serving row (q_ann_index_search_probe2) — the faiss nprobe
@@ -2355,11 +2352,7 @@ object VectorOps {
     */
   def ivfPqIndexSearchProbe2(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureSearchIndex(spark, dir)
-    val r = searchStored(spark, dir, base, Nil, nprobe = IvfNProbe)
-      .filter(col("rank") <= TopKPq)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(searchStored(spark, dir, base, Nil, nprobe = IvfNProbe))
   }
 
   /** Build-at-most-once gate shared by the steady-state rows: returns
@@ -2448,11 +2441,7 @@ object VectorOps {
       .filter(col("vec_id") % AddModulus === DeleteResidue)
       .select(col("vec_id"))
       .unionByName(unknown))
-    val r = searchStored(spark, dir, base, Nil)
-      .filter(col("rank") <= TopKPq)
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    served(searchStored(spark, dir, base, Nil))
   }
 
   /** Index OBSERVABILITY row (q_ann_index_stats) — faiss's
@@ -2512,57 +2501,8 @@ object VectorOps {
     * same oracle SQL. Shares [[ensureSearchIndex]]'s build-at-most-once
     * gate (same single-writer assumption as [[indexBase]]).
     */
-  def ivfPqIndexSearchSql(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureSearchIndex(spark, dir)
-    graft.functions.VectorDot.register(spark)
-    Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("graft_ann_embeddings")
-    spark.read.parquet(s"$base/centroids")
-      .createOrReplaceTempView("graft_ann_centroids")
-    spark.read.parquet(s"$base/codebooks")
-      .createOrReplaceTempView("graft_ann_codebooks")
-    spark.read.parquet(s"$base/lists")
-      .createOrReplaceTempView("graft_ann_lists")
-    val r6 = (x: String) => s"CAST(floor(($x) * 1.0E6 + 0.5) AS DOUBLE) / 1.0E6"
-    val d = PqSubDim
-    spark.sql(s"""
-      WITH q AS (
-        SELECT vec_id AS q_id, embedding AS q_emb
-        FROM graft_ann_embeddings WHERE vec_id < $NQueries),
-      cells AS (
-        SELECT q_id, q_emb, cluster, cell_sim,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY cell_sim DESC, cluster ASC) AS rn
-        FROM (SELECT /*+ BROADCAST(c) */ q.q_id, q.q_emb, c.cluster,
-                     ${r6("vector_dot(q.q_emb, c.centroid)")} AS cell_sim
-              FROM q CROSS JOIN graft_ann_centroids c)),
-      probed AS (
-        SELECT q_id, q_emb, cluster AS cell, cell_sim FROM cells WHERE rn <= 1),
-      lut AS (
-        SELECT /*+ BROADCAST(cb) */ p.q_id, cb.sub, cb.code,
-               ${r6(s"vector_dot(slice(p.q_emb, cb.sub * $d + 1, $d), cb.centroid)")} AS part
-        FROM probed p CROSS JOIN graft_ann_codebooks cb),
-      cand AS (
-        SELECT /*+ BROADCAST(p) */ l.vec_id, l.sub, l.code,
-               p.q_id, p.cell, p.cell_sim
-        FROM graft_ann_lists l
-        JOIN probed p ON CAST(l.cell AS INT) = p.cell
-        WHERE l.vec_id <> p.q_id),
-      scored AS (
-        SELECT /*+ BROADCAST(lut) */ c.q_id, c.cell, c.cell_sim,
-               c.vec_id AS neighbor_id,
-               CAST(sum(CAST(lut.part AS DECIMAL(20,10))) AS DOUBLE) AS approx_sim
-        FROM cand c
-        JOIN lut ON lut.q_id = c.q_id AND lut.sub = c.sub AND lut.code = c.code
-        GROUP BY c.q_id, c.cell, c.cell_sim, c.vec_id),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY q_id
-                    ORDER BY approx_sim DESC, neighbor_id ASC) AS rank
-        FROM scored)
-      SELECT q_id, cell, cell_sim, rank, neighbor_id, approx_sim
-      FROM ranked WHERE rank <= $TopKPq
-      ORDER BY q_id, rank""")
-  }
+  def ivfPqIndexSearchSql(spark: SparkSession, dir: String): DataFrame =
+    storedSearchSql(spark, dir, ensureSearchIndex(spark, dir), masked = false)
 
   /** The masked DELTA-UNION read restated as PURE SQL TEXT
     * (q_ann_index_masked_sql) — the serving state a continuously
@@ -2591,21 +2531,44 @@ object VectorOps {
     ivfPqDelete(spark, base, embDistributed(spark, dir)
       .filter(col("vec_id") % AddModulus === DeleteResidue)
       .select(col("vec_id")))
+    storedSearchSql(spark, dir, base, masked = true)
+  }
+
+  /** The one CTE template behind both SQL serving rows: views over the
+    * stored tables, then probe → LUT → per-scan pruned candidates →
+    * ADC sum → rank. `masked` adds the delta scan (its own probe join,
+    * below the UNION ALL), the tombstone LEFT ANTI JOIN above the union,
+    * and the `from_delta` label.
+    */
+  private def storedSearchSql(spark: SparkSession, dir: String, base: String,
+      masked: Boolean): DataFrame = {
     graft.functions.VectorDot.register(spark)
     Tables.load(spark, dir, "embeddings")
       .createOrReplaceTempView("graft_ann_embeddings")
-    spark.read.parquet(s"$base/centroids")
-      .createOrReplaceTempView("graft_ann_centroids")
-    spark.read.parquet(s"$base/codebooks")
-      .createOrReplaceTempView("graft_ann_codebooks")
-    spark.read.parquet(s"$base/lists")
-      .createOrReplaceTempView("graft_ann_lists")
-    spark.read.parquet(s"$base/lists_delta")
-      .createOrReplaceTempView("graft_ann_delta")
-    spark.read.parquet(s"$base/$DeletesTable")
-      .createOrReplaceTempView("graft_ann_deletes")
+    val views = Seq("centroids" -> "centroids", "codebooks" -> "codebooks",
+      "lists" -> "lists") ++
+      (if (masked) Seq("lists_delta" -> "delta", DeletesTable -> "deletes")
+       else Nil)
+    views.foreach { case (table, view) =>
+      spark.read.parquet(s"$base/$table")
+        .createOrReplaceTempView(s"graft_ann_$view")
+    }
     val r6 = (x: String) => s"CAST(floor(($x) * 1.0E6 + 0.5) AS DOUBLE) / 1.0E6"
     val d = PqSubDim
+    val scans = (if (masked) Seq("lists", "delta") else Seq("lists")).map(v =>
+      s"""SELECT /*+ BROADCAST(p) */ l.vec_id, l.sub, l.code,
+               p.q_id, p.cell, p.cell_sim
+        FROM graft_ann_$v l
+        JOIN probed p ON CAST(l.cell AS INT) = p.cell
+        WHERE l.vec_id <> p.q_id""")
+    val live = if (!masked) "" else """
+      live AS (
+        SELECT c.* FROM cand c
+        LEFT ANTI JOIN (SELECT DISTINCT vec_id FROM graft_ann_deletes) dd
+          ON c.vec_id = dd.vec_id),"""
+    val label =
+      if (masked) s",\n             neighbor_id % $AddModulus = $AddResidue AS from_delta"
+      else ""
     spark.sql(s"""
       WITH q AS (
         SELECT vec_id AS q_id, embedding AS q_emb
@@ -2624,34 +2587,19 @@ object VectorOps {
                ${r6(s"vector_dot(slice(p.q_emb, cb.sub * $d + 1, $d), cb.centroid)")} AS part
         FROM probed p CROSS JOIN graft_ann_codebooks cb),
       cand AS (
-        SELECT /*+ BROADCAST(p) */ l.vec_id, l.sub, l.code,
-               p.q_id, p.cell, p.cell_sim
-        FROM graft_ann_lists l
-        JOIN probed p ON CAST(l.cell AS INT) = p.cell
-        WHERE l.vec_id <> p.q_id
-        UNION ALL
-        SELECT /*+ BROADCAST(p) */ l.vec_id, l.sub, l.code,
-               p.q_id, p.cell, p.cell_sim
-        FROM graft_ann_delta l
-        JOIN probed p ON CAST(l.cell AS INT) = p.cell
-        WHERE l.vec_id <> p.q_id),
-      live AS (
-        SELECT c.* FROM cand c
-        LEFT ANTI JOIN (SELECT DISTINCT vec_id FROM graft_ann_deletes) dd
-          ON c.vec_id = dd.vec_id),
+        ${scans.mkString("\n        UNION ALL\n        ")}),$live
       scored AS (
         SELECT /*+ BROADCAST(lut) */ c.q_id, c.cell, c.cell_sim,
                c.vec_id AS neighbor_id,
                CAST(sum(CAST(lut.part AS DECIMAL(20,10))) AS DOUBLE) AS approx_sim
-        FROM live c
+        FROM ${if (masked) "live" else "cand"} c
         JOIN lut ON lut.q_id = c.q_id AND lut.sub = c.sub AND lut.code = c.code
         GROUP BY c.q_id, c.cell, c.cell_sim, c.vec_id),
       ranked AS (
         SELECT *, row_number() OVER (PARTITION BY q_id
                     ORDER BY approx_sim DESC, neighbor_id ASC) AS rank
         FROM scored)
-      SELECT q_id, cell, cell_sim, rank, neighbor_id, approx_sim,
-             neighbor_id % $AddModulus = $AddResidue AS from_delta
+      SELECT q_id, cell, cell_sim, rank, neighbor_id, approx_sim$label
       FROM ranked WHERE rank <= $TopKPq
       ORDER BY q_id, rank""")
   }
@@ -2671,32 +2619,13 @@ object VectorOps {
     * [[NQueries]] probes; IVF = celled).
     */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val k = TopKIvf
     val exact = annBruteForce(spark, dir)
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopKIvf)
       .select(col("q_id"), col("neighbor_id"))
-    def hits(approx: DataFrame, name: String): DataFrame =
-      exact.join(approx.select(col("q_id"), col("neighbor_id")),
-          Seq("q_id", "neighbor_id"), "left_semi")
-        .groupBy("q_id").agg(count(lit(1)).as(name))
-    val h1 = hits(annIvfProbed(spark, dir, 1), "hits_probe1")
-    val h2 = hits(annIvfProbed(spark, dir, IvfNProbe), "hits_probe2")
-    // n_exact is MEASURED per query (the size of its exact top-k set,
-    // < k when the corpus has fewer than k+1 non-self vectors), same as
-    // ivfPqIndexRecall — a constant-k denominator understates recall on
-    // small or heavily-retracted corpora.
-    val r = exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(h1, Seq("q_id"), "left")
-      .join(h2, Seq("q_id"), "left")
-      .select(col("q_id"), col("n_exact"),
-        coalesce(col("hits_probe1"), lit(0L)).as("hits_probe1"),
-        coalesce(col("hits_probe2"), lit(0L)).as("hits_probe2"))
-      .withColumn("recall_probe1",
-        F.roundHalfUp(col("hits_probe1").cast("double") /
-          col("n_exact").cast("double"), 6))
-      .withColumn("recall_probe2",
-        F.roundHalfUp(col("hits_probe2").cast("double") /
-          col("n_exact").cast("double"), 6))
+    def approx(nprobe: Int) = annIvfProbed(spark, dir, nprobe)
+      .select(col("q_id"), col("neighbor_id"))
+    val r = recallOf(exact,
+        "_probe1" -> approx(1), "_probe2" -> approx(IvfNProbe))
       .withColumn("probe2_improves",
         col("hits_probe2") >= col("hits_probe1"))
     Out.sorted(r)(col("q_id"))
@@ -2724,42 +2653,19 @@ object VectorOps {
     * frames, one semi-join, one left join.
     */
   def ivfPqIndexRecall(spark: SparkSession, dir: String): DataFrame = {
-    val k = TopKPq
     val base = ensureIndex(spark, dir, "delete", emb(spark, dir))
     ivfPqDelete(spark, base, embDistributed(spark, dir)
       .filter(col("vec_id") % AddModulus === DeleteResidue)
       .select(col("vec_id")))
     val approx = searchStored(spark, dir, base, Nil)
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopKPq)
       .select(col("q_id"), col("neighbor_id"))
     val live = embDistributed(spark, dir)
       .filter(col("vec_id") % AddModulus =!= DeleteResidue)
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val exact = live.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(desc("cos_sim"), asc("neighbor_id"))))
-      .filter(col("rank") <= k)
+    val exact = ranked(exactSims(live, queries(emb(spark, dir))), "cos_sim",
+        Some(TopKPq))
       .select(col("q_id"), col("neighbor_id"))
-    val hits = exact.join(approx, Seq("q_id", "neighbor_id"), "left_semi")
-      .groupBy("q_id").agg(count(lit(1)).as("hits"))
-    // n_exact is the MEASURED size of the per-query exact set, not the
-    // requested k: a tiny live corpus (< k+1 non-self vectors after the
-    // retraction) yields fewer than k exact neighbors, and dividing by
-    // k there would understate recall with an inflated denominator
-    val r = exact.groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), col("n_exact"),
-        coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall",
-        F.roundHalfUp(col("hits").cast("double") /
-          col("n_exact").cast("double"), 6))
-    Out.sorted(r)(col("q_id"))
+    Out.sorted(recallOf(exact, "" -> approx))(col("q_id"))
   }
 
   /** Recall-under-MUTATION sweep with the nprobe dial
@@ -2797,18 +2703,13 @@ object VectorOps {
       corpus.filter(res === AddResidue), "lists_delta_b1")
     ivfPqDelete(spark, base,
       corpus.filter(res === DeleteResidue).select(col("vec_id")))
-    val q = emb(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     // ONE exact similarity table for the whole chain (guide §1.2):
     // both stages' exact top-k are residue FILTERS of the same
     // corpus × queries cosine frame, and ranking after the filter is
     // identical to ranking a pre-filtered cross join — so the brute
     // pass (the chain's only corpus-sized similarity job) runs once
     // instead of once per stage. Tiny: corpus × NQueries rows.
-    val exactAll = Out.eager(corpus.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        F.roundHalfUp(dot(col("q_emb"), col("embedding")), 6).as("cos_sim")))
+    val exactAll = Out.eager(exactSims(corpus, queries(emb(spark, dir))))
     val nres = col("neighbor_id") % AddModulus
     def stageRecall(stage: String, deltas: Seq[String],
         livePred: Column): DataFrame = {
@@ -2818,56 +2719,31 @@ object VectorOps {
       // each query's top-ranked cell and re-ranking — candidates and
       // LUT scores are probe-count-independent, so the restriction IS
       // the shallow search. Halves the chain's search cost; the
-      // derivation's tie-breaks (cell_sim desc, cell asc; approx_sim
-      // desc, neighbor asc) mirror searchStored's probed/rank windows.
+      // derivation runs searchStored's own kernel steps (bestCells,
+      // ranked), so its tie-breaks are the same by construction.
       val scored = searchStored(spark, dir, base, deltas, IvfNProbe)
         .select(col("q_id"), col("cell"), col("cell_sim"),
           col("neighbor_id"), col("approx_sim"), col("rank"))
         .persist()
       try {
-        val topCell = scored.select(col("q_id"), col("cell"), col("cell_sim"))
-          .distinct()
-          .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-            .orderBy(desc("cell_sim"), asc("cell"))))
-          .filter(col("rn") === 1)
+        val topCell = bestCells(
+            scored.select(col("q_id"), col("cell"), col("cell_sim")).distinct(),
+            "cell", 1)
           .select(col("q_id"), col("cell"))
-        def approx(nprobe: Int) =
-          if (nprobe >= IvfNProbe)
-            scored.filter(col("rank") <= k)
-              .select(col("q_id"), col("neighbor_id"))
-          else
-            scored.join(topCell, Seq("q_id", "cell"))
-              .withColumn("r1", row_number().over(
-                Window.partitionBy(col("q_id"))
-                  .orderBy(desc("approx_sim"), asc("neighbor_id"))))
-              .filter(col("r1") <= k)
-              .select(col("q_id"), col("neighbor_id"))
-        val exact = exactAll.filter(livePred)
-          .withColumn("rank", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(desc("cos_sim"), asc("neighbor_id"))))
-          .filter(col("rank") <= k)
+        val shallow = ranked(scored.join(topCell, Seq("q_id", "cell")),
+          "approx_sim", Some(k))
+        val exact = ranked(exactAll.filter(livePred), "cos_sim", Some(k))
           .select(col("q_id"), col("neighbor_id"))
-        def hits(a: DataFrame, name: String) =
-          exact.join(a, Seq("q_id", "neighbor_id"), "left_semi")
-            .groupBy("q_id").agg(count(lit(1)).as(name))
+        val r = recallOf(exact,
+          "_probe1" -> shallow.select(col("q_id"), col("neighbor_id")),
+          "_probe2" -> scored.filter(col("rank") <= k)
+            .select(col("q_id"), col("neighbor_id")))
         // The stage result is eager'd (localCheckpoint): it pins the
         // stage's rows BEFORE the next lifecycle verb mutates the
         // layout the lazy search plans would otherwise re-read
         // post-swap, and it lets `scored`'s cache be released here
         // instead of leaking past the builder.
-        Out.eager(exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-          .join(hits(approx(1), "hits_probe1"), Seq("q_id"), "left")
-          .join(hits(approx(IvfNProbe), "hits_probe2"), Seq("q_id"), "left")
-          .select(lit(stage).as("stage"), col("q_id"), col("n_exact"),
-            coalesce(col("hits_probe1"), lit(0L)).as("hits_probe1"),
-            coalesce(col("hits_probe2"), lit(0L)).as("hits_probe2"))
-          .withColumn("recall_probe1",
-            F.roundHalfUp(col("hits_probe1").cast("double") /
-              col("n_exact").cast("double"), 6))
-          .withColumn("recall_probe2",
-            F.roundHalfUp(col("hits_probe2").cast("double") /
-              col("n_exact").cast("double"), 6)))
+        Out.eager(r.select(lit(stage).as("stage"), col("*")))
       } finally { scored.unpersist(false); () }
     }
     // stage-1 pinning that used to be a parquet sidecar write + read

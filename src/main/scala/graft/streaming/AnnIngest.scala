@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.Out
 import graft.operators.VectorOps
 
 /** Streaming maintenance of the persisted IVF-PQ index — the scheduled
@@ -225,17 +224,8 @@ object AnnIngest {
     }
     StreamOracle.drain(
       start(spark, s"$tmp/landing", base, s"$tmp/ckpt"), "ann ingest")
-    val r = VectorOps.searchStored(spark, dir, base,
-        VectorOps.committedDeltas(spark, base, DeltaPrefix))
-      .filter(col("rank") <= VectorOps.TopKPq)
-      .withColumn("from_batch",
-        when(col("neighbor_id") % VectorOps.AddModulus ===
-          VectorOps.AddResidue, 1)
-          .when(col("neighbor_id") % VectorOps.AddModulus ===
-            VectorOps.AddResidue2, 2)
-          .otherwise(0))
-      .select("q_id", "cell", "cell_sim", "rank", "neighbor_id",
-        "approx_sim", "from_batch")
-    Out.sorted(r)(col("q_id"), col("rank"))
+    VectorOps.served(VectorOps.searchStored(spark, dir, base,
+        VectorOps.committedDeltas(spark, base, DeltaPrefix)),
+      VectorOps.fromBatch)
   }
 }

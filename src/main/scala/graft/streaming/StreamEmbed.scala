@@ -90,11 +90,8 @@ object StreamEmbed {
       vecs: DataFrame, n: Int = VectorOps.NPlanes): DataFrame = {
     val b = vecs.select(col("vec_id"), col("ts"), col("embedding"),
       VectorOps.bucketOfN(col("embedding"), n).as("home"))
-    val probeList = array(
-      col("home") +: (0 until n).map(p =>
-        col("home").bitwiseXOR(lit(1L << p))): _*)
     b.select(col("vec_id"), col("ts"), col("embedding"),
-        col("home"), explode(probeList).as("bucket"))
+        col("home"), explode(VectorOps.hamming1Probes(col("home"), n)).as("bucket"))
       .select(col("bucket"), (col("bucket") === col("home")).as("is_home"),
         col("vec_id"), col("ts"), col("embedding"))
   }
