@@ -41,70 +41,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (isAdjustedToUTC=false) must read as
-      // TIMESTAMP_LTZ raw-micros (the DuckDB oracle's epoch_us view), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // default 100-entry codegen class cache thrashes across a
-      // 50+-query sweep: the heavy generated stages (16-column minhash
-      // aggregate) get evicted between warmup and measurement and pay
-      // janino + JIT again on every run — observed 5x on the LSH
-      // queries. Size it to hold the whole catalog.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Sort-based shuffle writer for the small-reduce-count regime
-      // (SPARK_GRAFT_BYPASS overrides; bypass default is 200). The
-      // bypass-merge writer opens one stream PER REDUCE PARTITION per
-      // map task — M x R file creates/merges per exchange — which a
-      // stack-sampled profile showed as the dominant CPU of every
-      // many-exchange query at test scale (DiskBlockObjectWriter.
-      // initialize + copyFileStreamNIO; q_ann_index_roundtrip wall
-      // 10.2 -> 5.9 s with the sort writer). Scale-safe by
-      // construction: at warehouse reduce counts (R > 200) the bypass
-      // path never fires, so 0 only changes the small-R regime, where
-      // one spill file + index per map task beats R open files.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
-      // Raw local filesystem for file:// (SPARK_GRAFT_FILE_IMPL
-      // overrides): without native Hadoop libs the default checksummed
-      // LocalFileSystem shells out `ls -ld`/chmod PER FILE touched
-      // (stack-sampled: Shell.runCommand dominating idle wall of every
-      // write-heavy row) and writes a .crc shadow beside every file.
-      // Local-environment fix, inert at scale: HDFS/S3 never route
-      // through this path (q_corrupt_parquet_scan 4.8 -> 1.6 s).
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_FILE_IMPL",
-          "org.apache.hadoop.fs.RawLocalFileSystem"))
-      // NOT set: fs.AbstractFileSystem.file.impl (the FileContext twin
-      // of the fs.file.impl fix, which streaming's CheckpointFileManager
-      // routes through). Stack samples show residual Shell.runCommand
-      // forks under the checkpoint paths, but swapping LocalFs →
-      // RawLocalFs was measured WORSE on an 8-drain subset (44.3 vs
-      // 32.3 s, r16 A/B with the raw arm at LOWER ambient load) — the
-      // checksummed FileContext stays.
-      // AQE partition-coalescing dials, pinned EXPLICITLY at the Spark
-      // defaults after a measured three-arm A/B (r16; both echoed in the
-      // env audit). parallelismFirst=true IS already
-      // the byte-derived rule of guide §2.2 — the coalescer targets
-      // max(shuffled-bytes/parallelism, 1 MB), so the catalog's tiny
-      // exchanges land at 1-5 reduce tasks today. Respecting the 64 MB
-      // advisory instead (false, the warehouse recommendation) was
-      // measured WORSE here: reduce stages whose bytes are tiny but
-      // whose per-row compute is dense (pagerank loop, basket lift,
-      // boxplot percentiles) collapse to one task and serialize —
-      // 27-query subset 82.6 s (true) vs 92.3 s (false, 64m) vs 84.7 s
-      // (false, 4m), while only the many-exchange ANN composites
-      // improved. The small-bytes/dense-CPU regime is exactly where the
-      // advisory misleads; at warehouse bytes the two settings converge.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("graft.sort.results", "false")
     // experiment dial (mirrors StageProfile): pin the streaming
@@ -412,4 +349,77 @@ object Bench {
     // non-zero exit or stderr noise after the JSON line.
     try spark.stop() catch { case _: Throwable => () }
   }
+}
+
+/** The one Spark session configuration: every main and the test session build from it. */
+object GraftSession {
+  val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  def builder(cpus: String = cpus): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // naive parquet timestamps (isAdjustedToUTC=false) must read as
+      // TIMESTAMP_LTZ raw-micros (the DuckDB oracle's epoch_us view), not NTZ
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      // default 100-entry codegen class cache thrashes across a
+      // 50+-query sweep: the heavy generated stages (16-column minhash
+      // aggregate) get evicted between warmup and measurement and pay
+      // janino + JIT again on every run — observed 5x on the LSH
+      // queries. Size it to hold the whole catalog.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // Sort-based shuffle writer for the small-reduce-count regime
+      // (Spark's default threshold is 200; the sf0.1 and sf1 A/B of 200
+      // vs 0 is OPTIMIZATION_r16.md task 7). The bypass-merge writer
+      // opens one stream PER REDUCE PARTITION per map task — M x R
+      // file creates/merges per exchange — which a
+      // stack-sampled profile showed as the dominant CPU of every
+      // many-exchange query at test scale (DiskBlockObjectWriter.
+      // initialize + copyFileStreamNIO; q_ann_index_roundtrip wall
+      // 10.2 -> 5.9 s with the sort writer). Scale-safe by
+      // construction: at warehouse reduce counts (R > 200) the bypass
+      // path never fires, so 0 only changes the small-R regime, where
+      // one spill file + index per map task beats R open files.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // Raw local filesystem for file:// (SPARK_GRAFT_FILE_IMPL
+      // overrides): without native Hadoop libs the default checksummed
+      // LocalFileSystem shells out `ls -ld`/chmod PER FILE touched
+      // (stack-sampled: Shell.runCommand dominating idle wall of every
+      // write-heavy row) and writes a .crc shadow beside every file.
+      // Local-environment fix, inert at scale: HDFS/S3 never route
+      // through this path (q_corrupt_parquet_scan 4.8 -> 1.6 s).
+      // Trade-off, accepted for this sandbox: the raw FS has no CRC
+      // shadow, so the oracle gate runs without FS-level checksums and
+      // leans on Parquet's own page-level checks for local-disk
+      // corruption; SPARK_GRAFT_FILE_IMPL restores the checksummed FS.
+      .config("spark.hadoop.fs.file.impl",
+        sys.env.getOrElse("SPARK_GRAFT_FILE_IMPL",
+          "org.apache.hadoop.fs.RawLocalFileSystem"))
+      // NOT set: fs.AbstractFileSystem.file.impl (the FileContext twin
+      // of the fs.file.impl fix, which streaming's CheckpointFileManager
+      // routes through). Stack samples show residual Shell.runCommand
+      // forks under the checkpoint paths, but swapping LocalFs →
+      // RawLocalFs was measured WORSE on an 8-drain subset (44.3 vs
+      // 32.3 s, r16 A/B with the raw arm at LOWER ambient load) — the
+      // checksummed FileContext stays.
+      // AQE partition-coalescing dials, pinned EXPLICITLY at the Spark
+      // defaults after a measured three-arm A/B (r16; both echoed in the
+      // env audit). parallelismFirst=true IS already
+      // the byte-derived rule of guide §2.2 — the coalescer targets
+      // max(shuffled-bytes/parallelism, 1 MB), so the catalog's tiny
+      // exchanges land at 1-5 reduce tasks today. Respecting the 64 MB
+      // advisory instead (false, the warehouse recommendation) was
+      // measured WORSE here: reduce stages whose bytes are tiny but
+      // whose per-row compute is dense (pagerank loop, basket lift,
+      // boxplot percentiles) collapse to one task and serialize —
+      // 27-query subset 82.6 s (true) vs 92.3 s (false, 64m) vs 84.7 s
+      // (false, 4m), while only the many-exchange ANN composites
+      // improved. The small-bytes/dense-CPU regime is exactly where the
+      // advisory misleads; at warehouse bytes the two settings converge.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
 }

@@ -3,19 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole ScalaTest run (sbt forks a
-  * single JVM; spinning a session per suite would dominate test time).
+  * single JVM; spinning a session per suite would dominate test time),
+  * built from the same conf as the mains.
   */
 object SparkT {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (isAdjustedToUTC=false) must read as
-      // TIMESTAMP_LTZ raw-micros (the DuckDB oracle's epoch_us view), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder("4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
