@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.sources.ParquetMeta
+
 /** Canonical table registry over the driver-provided parquet testdata.
   *
   * The engine's relational surface mirrors the reference's SQLite tables
@@ -22,7 +24,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetMeta.read(spark, s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark reads as a nanos
     // LongType only under spark.sql.legacy.parquet.nanosAsLong (set by our
     // entrypoints). Normalize to Spark's native microsecond timestamp and

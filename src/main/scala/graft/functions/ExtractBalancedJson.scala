@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -90,10 +89,9 @@ object ExtractBalancedJson {
 
   /** Register as a SQL-callable function on this session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("extract_balanced_json"),
-      new ExpressionInfo(classOf[ExtractBalancedJson].getName, "extract_balanced_json"),
-      (exprs: Seq[Expression]) => ExtractBalancedJson(exprs.head, exprs(1)))
+    Registry.registerOnce(spark, "extract_balanced_json",
+      classOf[ExtractBalancedJson].getName,
+      exprs => ExtractBalancedJson(exprs.head, exprs(1)))
 
   /** Column-API surface (registers lazily via call_function). */
   def apply(spark: SparkSession, html: Column, marker: Column): Column = {

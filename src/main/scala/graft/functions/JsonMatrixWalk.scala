@@ -5,10 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -154,10 +153,8 @@ object JsonMatrixWalk {
 
   /** Register as a SQL-callable function on this session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("json_matrix_walk"),
-      new ExpressionInfo(classOf[JsonMatrixWalk].getName, "json_matrix_walk"),
-      (exprs: Seq[Expression]) => JsonMatrixWalk(exprs.head))
+    Registry.registerOnce(spark, "json_matrix_walk", classOf[JsonMatrixWalk].getName,
+      exprs => JsonMatrixWalk(exprs.head))
 
   /** Column-API surface (registers lazily via call_function). */
   def apply(spark: SparkSession, json: Column): Column = {

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{graftbridge, Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.operators.TextOps
 
@@ -62,9 +61,6 @@ object TextSql {
   /** Register every combinator as a SQL-callable function on `spark`. */
   def registerAll(spark: SparkSession): Unit =
     combinators.foreach { case (name, arity, f) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(TextSql.getClass.getName, name),
-        builderOf(name, arity, f))
+      Registry.registerOnce(spark, name, TextSql.getClass.getName, builderOf(name, arity, f))
     }
 }

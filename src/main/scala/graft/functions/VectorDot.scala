@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -85,10 +84,8 @@ case class VectorDot(left: Expression, right: Expression)
 
 object VectorDot {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (exprs: Seq[Expression]) => VectorDot(exprs.head, exprs(1)))
+    Registry.registerOnce(spark, "vector_dot", classOf[VectorDot].getName,
+      exprs => VectorDot(exprs.head, exprs(1)))
 
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)

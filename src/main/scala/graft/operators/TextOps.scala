@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.{Out, Tables}
 import graft.functions.F
+import graft.sources.ParquetMeta
 
 /** LLM-training-data text operators over the `documents` table: token
   * statistics, corpus/language profiling, exact + near-duplicate
@@ -861,7 +862,7 @@ object TextOps {
           .withColumn("cdoc", min(col("doc_id")).over(w))
           .withColumn("gsize", count(lit(1)).over(w))
         val (tokCanon, tokMembers) = cloneCollapsed(docsD)
-        val nDocs = graft.sources.ParquetMeta.rowCount(
+        val nDocs = ParquetMeta.rowCount(
           spark, s"$dir/documents.parquet")
         val fps = simhashTableFrom(tokCanon, 4 * derivedSimhashBandBits(nDocs))
           .select(col("doc_id"), col("simhash").as("simhash_d"))
@@ -1198,7 +1199,7 @@ object TextOps {
         .toMap
     def batchSig(rem: Int) = sig.filter(residue === rem)
     def decide(rem: Int, no: Int): DataFrame =
-      Out.eager(admitAgainst(spark.read.parquet(indexDir), batchSig(rem))
+      Out.eager(admitAgainst(ParquetMeta.read(spark, indexDir), batchSig(rem))
         .select(lit(no).as("batch_no") +: Seq("doc_id", "n_candidates",
           "n_matches", "best_jaccard", "admitted").map(col): _*))
     // append the admitted docs' signatures; the delta-only contract is a
@@ -1391,7 +1392,7 @@ object TextOps {
     * here (git-verified).
     */
   def simhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val n = graft.sources.ParquetMeta.rowCount(spark, s"$dir/documents.parquet")
+    val n = ParquetMeta.rowCount(spark, s"$dir/documents.parquet")
     simhashNearDupFromTable(spark, dir, "simhash_d",
       4 * derivedSimhashBandBits(n))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Out, Tables}
 import graft.functions.F
+import graft.sources.ParquetMeta
 
 /** Similarity search over the `embeddings` table (64-dim unit-norm
   * float vectors): brute-force cosine top-k as the exact baseline, and a
@@ -274,7 +275,7 @@ object VectorOps {
     * dead weight Catalyst cannot always eliminate).
     */
   private[graft] def embedNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val n = graft.sources.ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
+    val n = ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
     embedNearDupCollapsed(
       emb(spark, dir).select(col("vec_id"), col("embedding")),
       derivedPlanes(n), spark.sparkContext.defaultParallelism)
@@ -759,7 +760,7 @@ object VectorOps {
     * plan would be dead weight).
     */
   private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame = {
-    val n = graft.sources.ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
+    val n = ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
     knnEdgesFrom(
       emb(spark, dir).select(col("vec_id"), col("embedding")),
       derivedPlanes(n), spark.sparkContext.defaultParallelism)
@@ -1210,29 +1211,29 @@ object VectorOps {
     * this frame is the written PQ index).
     */
   private def pqSubs(spark: SparkSession, dir: String): DataFrame =
-    subsOf(spark, emb(spark, dir))
+    Out.eager(subsOf(spark, emb(spark, dir)))
 
   /** Sub-vector rows of ANY (vec_id, embedding, …) frame — [[pqSubs]]
     * for the whole corpus, and the per-frame form the split-trained
     * index build ([[ivfPqPersistFrames]]) and the delta encode
-    * ([[ivfPqAdd]]) reuse.
+    * ([[ivfPqAddBatch]]) reuse. Lazy: a caller that reads the frame
+    * more than once (a Lloyd loop) checkpoints it itself.
     */
   private def subsOf(spark: SparkSession, e: DataFrame): DataFrame = {
     val chunks = transform(sequence(lit(0), lit(PqSubspaces - 1)),
       m => slice(col("embedding"), m * PqSubDim + 1, lit(PqSubDim)))
-    // Explicit spread BEFORE the checkpoint: the encode pass is a
-    // map-side broadcast join over this frame, so its partition count
-    // IS the encode parallelism — a single-split scan would serialize
-    // the corpus × codebook argmin (measured 5.8 s -> 3.0 s wall on
-    // q_ann_pq at sf1, similarly IVF-PQ; on a real multi-split scan this collapses into
+    // Explicit spread: the encode pass is a map-side broadcast join
+    // over this frame, so its partition count IS the encode parallelism
+    // — a single-split scan would serialize the corpus × codebook
+    // argmin (measured 5.8 s -> 3.0 s wall on q_ann_pq at sf1,
+    // similarly IVF-PQ; on a real multi-split scan this collapses into
     // the partitioning the downstream windows need anyway).
-    Out.eager(e
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), posexplode(chunks).as(Seq("sub", "embedding"))))
+    e.repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+      .select(col("vec_id"), posexplode(chunks).as(Seq("sub", "embedding")))
   }
 
   /** Per-subspace dot LUT of every query against a PQ codebook frame. */
-  private def pqLut(q: DataFrame, cents: DataFrame): DataFrame =
+  private[graft] def pqLut(q: DataFrame, cents: DataFrame): DataFrame =
     q.crossJoin(broadcast(cents))
       .select(col("q_id"), col("sub"), col("code"),
         F.roundHalfUp(
@@ -1335,7 +1336,7 @@ object VectorOps {
     // (cached; zero Spark jobs), not an eager count() action inside
     // the query builder.
     val corpusRows =
-      graft.sources.ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
+      ParquetMeta.rowCount(spark, s"$dir/embeddings.parquet")
     val estCandidates =
       NQueries.toLong * 1L * math.max(1L, corpusRows / IvfNominalCells)
     val candSide = if (estCandidates <= ceiling) broadcast(cand) else cand
@@ -1466,12 +1467,14 @@ object VectorOps {
       .select(col("vec_id"), col("embedding"), col("label"))
     val (coarseCents, assigned) =
       lloydOnSplit(dist(train), dist(encode), col("label"))
-    // subsOf materializes the exploded sub-vector frame (a
-    // localCheckpoint job over the corpus); when the caller trains and
-    // encodes the SAME frame — every in-place build — reuse one
-    // materialization instead of paying the explode+checkpoint twice
-    val trainSubs = subsOf(spark, train)
-    val encodeSubs = if (encode eq train) trainSubs else subsOf(spark, encode)
+    // the Lloyd loop reads the exploded sub-vector frame once per
+    // step, so the build materializes it (a localCheckpoint job over
+    // the corpus); when the caller trains and encodes the SAME frame —
+    // every in-place build — reuse one materialization instead of
+    // paying the explode+checkpoint twice
+    def subs(f: DataFrame) = Out.eager(subsOf(spark, f))
+    val trainSubs = subs(train)
+    val encodeSubs = if (encode eq train) trainSubs else subs(encode)
     val (cents, codes) = pqIndexSplit(trainSubs, encodeSubs)
     coarseCents.write.mode("overwrite").parquet(s"$base/centroids")
     cents.write.mode("overwrite").parquet(s"$base/codebooks")
@@ -1576,8 +1579,8 @@ object VectorOps {
       fs.delete(p, true)
       return
     }
-    val coarseCents = spark.read.parquet(s"$base/centroids")
-    val codebooks = spark.read.parquet(s"$base/codebooks")
+    val coarseCents = ParquetMeta.read(spark, s"$base/centroids")
+    val codebooks = ParquetMeta.read(spark, s"$base/codebooks")
     val cells = assignTo(delta, coarseCents)
       .select(col("vec_id"), col("cluster").as("cell"))
     val codes = encodeAgainst(subsOf(spark, delta), codebooks)
@@ -1641,7 +1644,7 @@ object VectorOps {
   private def tombstones(
       spark: SparkSession, base: String): Option[DataFrame] =
     if (committed(spark, s"$base/$DeletesTable"))
-      Some(spark.read.parquet(s"$base/$DeletesTable")
+      Some(ParquetMeta.read(spark, s"$base/$DeletesTable")
         .select(col("vec_id")).distinct())
     else None
 
@@ -2058,7 +2061,7 @@ object VectorOps {
     * the stored assignment's int type exactly.
     */
   private def listsAt(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetMeta.read(spark, path)
       .select(col("vec_id"), col("sub"), col("code"),
         col("cell").cast("int").as("cell"))
 
@@ -2131,8 +2134,9 @@ object VectorOps {
     * query probes. More probes = more candidate lists scanned (still
     * DPP-pruned to exactly the probed cells) = higher recall at higher
     * latency — a pure read-side knob, the index is never touched. The
-    * LUT is built once per query (dropDuplicates on q_id), so the ADC
-    * join stays correct at any probe depth.
+    * LUT depends on the query alone, so it is built from the query
+    * frame (one row per (q_id, sub, code) at any probe depth) and the
+    * plan computes the probe once, for the candidate join.
     */
   private[graft] def searchStored(
       spark: SparkSession, dir: String, base: String,
@@ -2146,14 +2150,12 @@ object VectorOps {
     // committed-table filter is what makes add/compact/search verbs
     // composable in any order
     val presentDeltas = deltas.filter(s => committed(spark, s"$base/$s"))
-    val coarseCents = spark.read.parquet(s"$base/centroids")
-    val cents = spark.read.parquet(s"$base/codebooks")
-    val probed =
-      probeCells(queries(emb(spark, dir)), coarseCents, "cluster", nprobe)
-        .withColumnRenamed("cluster", "cell")
-    val lut = pqLut(
-      probed.select(col("q_id"), col("q_emb")).dropDuplicates("q_id"),
-      cents)
+    val coarseCents = ParquetMeta.read(spark, s"$base/centroids")
+    val cents = ParquetMeta.read(spark, s"$base/codebooks")
+    val q = queries(emb(spark, dir))
+    val probed = probeCells(q, coarseCents, "cluster", nprobe)
+      .withColumnRenamed("cluster", "cell")
+    val lut = pqLut(q, cents)
     val probeKeys = probed.select(col("q_id"), col("cell"), col("cell_sim"))
     def candOf(lists: DataFrame) = lists
       .join(broadcast(probeKeys), Seq("cell"))
@@ -2462,14 +2464,14 @@ object VectorOps {
     */
   def ivfPqIndexStats(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureSearchIndex(spark, dir)
-    val occ = spark.read.parquet(s"$base/lists")
+    val occ = ParquetMeta.read(spark, s"$base/lists")
       .groupBy(col("cell").cast("int").as("cell"))
       .agg(countDistinct(col("vec_id")).as("n_vectors"))
     // n_cells is the TRAINED nlist (the stored centroids table), not the
     // count of non-empty lists: faiss's imbalance factor nlist·Σnᵢ²/n²
     // counts empty cells — an index where one centroid captured nothing
     // is MORE imbalanced, and occupied-cell counting would understate it
-    val nCells = spark.read.parquet(s"$base/centroids")
+    val nCells = ParquetMeta.read(spark, s"$base/centroids")
       .agg(count(lit(1)).as("n_cells"))
     val tot = occ.agg(
       sum(col("n_vectors")).as("n"),
@@ -2550,7 +2552,7 @@ object VectorOps {
       (if (masked) Seq("lists_delta" -> "delta", DeletesTable -> "deletes")
        else Nil)
     views.foreach { case (table, view) =>
-      spark.read.parquet(s"$base/$table")
+      ParquetMeta.read(spark, s"$base/$table")
         .createOrReplaceTempView(s"graft_ann_$view")
     }
     val r6 = (x: String) => s"CAST(floor(($x) * 1.0E6 + 0.5) AS DOUBLE) / 1.0E6"
@@ -2583,9 +2585,9 @@ object VectorOps {
       probed AS (
         SELECT q_id, q_emb, cluster AS cell, cell_sim FROM cells WHERE rn <= 1),
       lut AS (
-        SELECT /*+ BROADCAST(cb) */ p.q_id, cb.sub, cb.code,
-               ${r6(s"vector_dot(slice(p.q_emb, cb.sub * $d + 1, $d), cb.centroid)")} AS part
-        FROM probed p CROSS JOIN graft_ann_codebooks cb),
+        SELECT /*+ BROADCAST(cb) */ q.q_id, cb.sub, cb.code,
+               ${r6(s"vector_dot(slice(q.q_emb, cb.sub * $d + 1, $d), cb.centroid)")} AS part
+        FROM q CROSS JOIN graft_ann_codebooks cb),
       cand AS (
         ${scans.mkString("\n        UNION ALL\n        ")}),$live
       scored AS (

@@ -66,7 +66,7 @@ object Compact {
       "spark.sql.files.openCostInBytes" -> OpenCostBytes.toString,
       "spark.sql.files.minPartitionNum" -> "1")
     try
-      spark.read.parquet(inPath)
+      ParquetMeta.read(spark, inPath)
         .write.mode("overwrite").parquet(outPath)
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -103,7 +103,7 @@ object Compact {
       .repartition(SmallFiles)
       .write.mode("overwrite").parquet(many)
     compact(spark, many, out)
-    val back = spark.read.parquet(out)
+    val back = ParquetMeta.read(spark, out)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         graft.functions.F.sumDecAsDouble(col("l_extendedprice"), 4).as("revenue"))

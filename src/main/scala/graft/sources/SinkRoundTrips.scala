@@ -55,7 +55,7 @@ object SinkRoundTrips {
     Sinks.upsertByKey(slice(0, 3, "v1"), path, Seq("o_orderkey"))
     Sinks.upsertByKey(slice(2, 5, "v2"), path, Seq("o_orderkey"))
     Sinks.upsertByKey(slice(2, 5, "v2"), path, Seq("o_orderkey"))
-    Out.sorted(spark.read.parquet(path))(col("o_orderkey"))
+    Out.sorted(ParquetMeta.read(spark, path))(col("o_orderkey"))
   }
 
   /** K5 fixed-column CSV export, read back through Spark's CSV reader:
@@ -112,7 +112,7 @@ object SinkRoundTrips {
     Tables.load(spark, dir, "lineitem")
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       .write.mode("overwrite").partitionBy("ship_month").parquet(path)
-    val back = spark.read.parquet(path)
+    val back = ParquetMeta.read(spark, path)
       .filter(col("ship_month") === PartitionMonth)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
@@ -137,7 +137,7 @@ object SinkRoundTrips {
         .withColumn("ver", lit(tag))
     Sinks.overwrite(summary(orders.filter(col("o_orderkey") % 2 === 0), "v1"), path)
     Sinks.overwrite(summary(orders, "v2"), path)
-    Out.sorted(spark.read.parquet(path))(col("o_orderstatus"))
+    Out.sorted(ParquetMeta.read(spark, path))(col("o_orderstatus"))
   }
 
   /** K3 append contract end to end (reference
@@ -157,7 +157,7 @@ object SinkRoundTrips {
           lit(s"batch$k").as("src"))
     Sinks.append(slice(0), path)
     Sinks.append(slice(1), path)
-    Out.sorted(spark.read.parquet(path))(col("o_orderkey"))
+    Out.sorted(ParquetMeta.read(spark, path))(col("o_orderkey"))
   }
 
   /** K6 JSON document sink round trip (reference pricebot.json settings
@@ -205,7 +205,7 @@ object SinkRoundTrips {
     fs.setTimes(dataFile(s"$base/snap_b"), 2000000L, -1L)
     val newest = Ingest.newestFile(spark, s"$base/snap_*/part-*.parquet")
       .getOrElse(throw new IllegalStateException("no snapshot file found"))
-    Out.sorted(spark.read.parquet(newest))(col("o_orderkey"))
+    Out.sorted(ParquetMeta.read(spark, newest))(col("o_orderkey"))
   }
 
   /** The S6 writer under the S6 reader: the workbook import/export round
@@ -302,7 +302,7 @@ object SinkRoundTrips {
       .select("doc_id", "text", "n_tokens", "shuffle_key", "shard_id")
     sharded.repartition(col("shard_id"))
       .write.mode("overwrite").partitionBy("shard_id").parquet(path)
-    val back = spark.read.parquet(path)
+    val back = ParquetMeta.read(spark, path)
     val ordered = sort_array(collect_list(
       struct(col("shuffle_key"), col("doc_id"))))
     val r = back.groupBy("shard_id").agg(

@@ -43,7 +43,7 @@ object Sinks {
     val staging = new Path(path + "__staging")
     val merged =
       if (fs.exists(target)) {
-        val existing = spark.read.parquet(path)
+        val existing = ParquetMeta.read(spark, path)
         val kept = existing.join(
           broadcast(incoming.select(keys.map(col): _*).distinct()),
           keys, "left_anti")

@@ -141,7 +141,7 @@ object ZOrder {
       Tables.load(spark, dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_returnflag", "l_extendedprice"),
       "l_partkey", "l_suppkey", path, ZFiles)
-    val back = spark.read.parquet(path)
+    val back = ParquetMeta.read(spark, path)
       .filter(col("l_partkey").between(PartLo, PartHi) &&
         col("l_suppkey").between(SuppLo, SuppHi))
       .groupBy(col("l_returnflag"))

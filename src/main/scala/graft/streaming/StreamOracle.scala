@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{Out, Tables}
 import graft.operators.{Sketches, TextOps}
+import graft.sources.ParquetMeta
 
 /** Driver-oracle entry points for the STREAMING maintenance paths —
   * the q_event_sessions_stream recipe (Sessions.eventSessionsStream)
@@ -117,7 +118,7 @@ object StreamOracle {
     landKeys(keys, s"$tmp/landing")
     drain(StreamSketch.start(spark, s"$tmp/landing", s"$tmp/sketch", s"$tmp/ckpt"),
       "cms")
-    Sketches.cmsTopEstimates(keys, spark.read.parquet(s"$tmp/sketch/cells"))
+    Sketches.cmsTopEstimates(keys, ParquetMeta.read(spark, s"$tmp/sketch/cells"))
   }
 
   /** q_hll_stream: stream orders customer keys through the HLL register
@@ -131,7 +132,7 @@ object StreamOracle {
     landKeys(keys, s"$tmp/landing")
     drain(StreamSketch.startHll(spark, s"$tmp/landing", s"$tmp/sketch", s"$tmp/ckpt"),
       "hll")
-    Sketches.hllReport(keys, spark.read.parquet(s"$tmp/sketch/regs"))
+    Sketches.hllReport(keys, ParquetMeta.read(spark, s"$tmp/sketch/regs"))
   }
 
   /** q_kmv_stream: stream orders customer keys through the KMV
@@ -145,7 +146,7 @@ object StreamOracle {
     landKeys(keys, s"$tmp/landing")
     drain(StreamSketch.startKmv(spark, s"$tmp/landing", s"$tmp/sketch", s"$tmp/ckpt"),
       "kmv")
-    Sketches.kmvReport(keys, spark.read.parquet(s"$tmp/sketch/kmv"))
+    Sketches.kmvReport(keys, ParquetMeta.read(spark, s"$tmp/sketch/kmv"))
   }
 
   /** q_histogram_stream: stream lineitem price cents through the
@@ -162,7 +163,7 @@ object StreamOracle {
       s"$tmp/ckpt", Sketches.StreamHistLoCents, Sketches.StreamHistHiCents),
       "histogram")
     Sketches.histogramPercentiles(cents,
-      spark.read.parquet(s"$tmp/sketch/hist"),
+      ParquetMeta.read(spark, s"$tmp/sketch/hist"),
       Sketches.StreamHistLoCents, Sketches.StreamHistHiCents)
   }
 
@@ -255,7 +256,7 @@ object StreamOracle {
     * in [[embedStreamAt]] (clone skew defeats plane widening alone).
     */
   def embedStream(spark: SparkSession, dir: String): DataFrame = {
-    val n = graft.sources.ParquetMeta.rowCount(
+    val n = ParquetMeta.rowCount(
       spark, s"$dir/embeddings.parquet")
     embedStreamAt(spark, dir, graft.operators.VectorOps.derivedPlanes(n),
       StreamEmbed.MaxBucketResidents, "embstream", LandingFiles)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.Sketches
+import graft.sources.ParquetMeta
 
 /** Streaming count-min sketch maintenance — the merge law in motion:
   * each micro-batch builds its own Depth×Width cell frame
@@ -61,7 +62,7 @@ object StreamSketch {
 
     val target = new Path(table)
     val merged =
-      if (fs.exists(target)) combine(spark.read.parquet(table), incoming)
+      if (fs.exists(target)) combine(ParquetMeta.read(spark, table), incoming)
       else incoming
     val staging = new Path(table + "__staging")
     // the running sketch is bounded-tiny forever (Depth×Width cells /
