@@ -44,10 +44,6 @@ object Bench {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("graft.sort.results", "false")
-    // experiment dial (mirrors StageProfile): pin the streaming
-    // state-partition count, overriding the landed-bytes derivation
-    sys.env.get("SPARK_GRAFT_STATE_PARTS")
-      .foreach(spark.conf.set("graft.stream.statePartitions", _))
     // captured BEFORE the sweep: what the box looked like when timing
     // began, not after the run's own load
     val loadStart = java.lang.management.ManagementFactory
@@ -229,56 +225,6 @@ object Bench {
       .mkString("{", ",", "}")
     val total = timed.collect { case (_, (v, _, _, _)) if v >= 0 => v }.sum
 
-    // Warm re-measure pass for cross-decade adjudication (the sf10
-    // methodology): a cold single-pass sweep swings 2-4x on identical
-    // plans, so every round a hand-built isolated-re-measure table in
-    // SCALE.md adjudicated the >10x/decade rows. With
-    // SPARK_GRAFT_WARM_BASELINE pointing at the lower-decade artifact,
-    // any row whose wall exceeds SPARK_GRAFT_WARM_RATIO (default 10) x
-    // its baseline wall is re-run min-of-2 WARM right here, and the
-    // number lands in the artifact itself ("warm_rerun") — the
-    // adjudication becomes data instead of prose.
-    val warmRerun: Seq[(String, Double)] =
-      sys.env.get("SPARK_GRAFT_WARM_BASELINE").toSeq.flatMap { path =>
-        val baseWalls =
-          try {
-            val txt = scala.io.Source.fromFile(path, "UTF-8").mkString
-            """"queries"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(txt)
-              .map(_.group(1)).toSeq.flatMap { body =>
-                """"([^"]+)"\s*:\s*(-?[0-9.eE+]+)""".r.findAllMatchIn(body)
-                  .map(m => m.group(1) -> m.group(2).toDouble)
-              }.toMap
-          } catch { case _: Throwable => Map.empty[String, Double] }
-        val ratio =
-          sys.env.getOrElse("SPARK_GRAFT_WARM_RATIO", "10").toDouble
-        // SPARK_GRAFT_WARM_EXTRA names rows that get the warm pass
-        // UNCONDITIONALLY (comma list): the streaming family's largest
-        // rows sit below the ratio trigger but carry per-trigger
-        // micro-batch overhead that only a warm number can separate
-        // from real growth — adjudicate them as data every cut.
-        val extra = sys.env.get("SPARK_GRAFT_WARM_EXTRA").toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
-        val flagged = timed.collect {
-          case (n, (sec, _, _, _))
-              if sec > 0 &&
-                (extra.contains(n) ||
-                  baseWalls.get(n).exists(b => b > 0 && sec > ratio * b)) => n
-        }
-        flagged.map { n =>
-          val walls = (1 to 2).flatMap { _ =>
-            hygiene()
-            val t0 = System.nanoTime()
-            val err = run(n)
-            val sec = (System.nanoTime() - t0) / 1e9
-            progress("warm_rerun", n, sec)
-            if (err.isEmpty) Some(sec) else None
-          }
-          n -> (if (walls.nonEmpty) walls.min else -1.0)
-        }
-      }
-    val warmJson = warmRerun
-      .map { case (k, v) => Json.quote(k) + ":" + (math.round(v * 1e4) / 1e4) }
-      .mkString("{", ",", "}")
     val loadJson = loadAt
       .map { case (k, v) => Json.quote(k) + ":" + (math.round(v * 100) / 100.0) }
       .mkString("{", ",", "}")
@@ -323,7 +269,7 @@ object Bench {
       "host_load_start" -> f"$loadStart%.2f"
     ).map { case (k, v) => Json.quote(k) + ":" + Json.quote(v) }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuQs,"batches":$batchesJson,"sec_per_batch":$secPerBatchJson,"warm_rerun":$warmJson,"load_at_start":$loadJson,"sf":${Json.quote(sfDir)},"errors":$errJson,"env":$audit}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuQs,"batches":$batchesJson,"sec_per_batch":$secPerBatchJson,"load_at_start":$loadJson,"sf":${Json.quote(sfDir)},"errors":$errJson,"env":$audit}"""
     // The driver captures only the log TAIL; a verbose shutdown once
     // truncated the r3 totals. The file in cwd is the truncation-proof
     // artifact (now also written incrementally per query, see

@@ -20,9 +20,6 @@ object StageProfile {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("graft.sort.results", "false")
-    // experiment dial: pin the streaming state-partition count
-    sys.env.get("SPARK_GRAFT_STATE_PARTS")
-      .foreach(spark.conf.set("graft.stream.statePartitions", _))
     case class Row(id: Int, name: String, wallMs: Long, cpuMs: Long,
                    tasks: Int, rows: Long)
     val stages = scala.collection.mutable.ArrayBuffer[Row]()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 import graft.functions.F
 import graft.sources.ParquetMeta
 
@@ -740,9 +740,7 @@ object TextOps {
     // it the whole shingle+k-permutation pipeline runs in ONE task
     // (measured 15.8 s -> the hinted form at sf0.1).
     val par = spark.sparkContext.defaultParallelism
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val sigTable = s"graft_sql_sig_$digest"
+    val sigTable = s"graft_sql_sig_${Scratch.digest(dir)}"
     this.synchronized {
       if (!spark.catalog.tableExists(sigTable)) {
         spark.sql(s"DROP TABLE IF EXISTS $sigTable")
@@ -845,9 +843,7 @@ object TextOps {
   private[graft] def signatureTableFull(
       spark: SparkSession, dir: String): DataFrame =
     this.synchronized {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      val name = s"graft_minhash_sig_$digest"
+      val name = s"graft_minhash_sig_${Scratch.digest(dir)}"
       if (!spark.catalog.tableExists(name)) {
         spark.sql(s"DROP TABLE IF EXISTS $name")
         val loc = new org.apache.hadoop.fs.Path(
@@ -1165,12 +1161,7 @@ object TextOps {
     * the probe that produced it.
     */
   def incrementalDedupChain(spark: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tmp = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_incchain_q_$digest").toString
-    val hp = new org.apache.hadoop.fs.Path(tmp)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val tmp = Scratch.fresh(spark, dir, "incchain_q")
     incrementalDedupChainOn(docsDistributed(spark, dir), s"$tmp/index")
   }
 

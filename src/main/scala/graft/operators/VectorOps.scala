@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 import graft.functions.F
 import graft.sources.ParquetMeta
 
@@ -1420,9 +1420,8 @@ object VectorOps {
     served(annIvfPqFromIndex(spark, dir, base))
   }
 
-  /** Digest-keyed index location under the JVM tmpdir (the
-    * SinkRoundTrips convention): repeated bench/verify runs overwrite
-    * one location instead of leaking copies. `tag` separates
+  /** The index location, a [[Scratch.dir]]: repeated bench/verify runs
+    * overwrite one location instead of leaking copies. `tag` separates
     * independent index lifecycles over the same corpus (the roundtrip
     * row and the add row must not race each other's lists/).
     *
@@ -1434,12 +1433,8 @@ object VectorOps {
     * concurrent same-corpus runs are possible, suffix `tag` with a
     * session token.
     */
-  private[graft] def indexBase(dir: String, tag: String = "index"): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_ivfpq_${tag}_$digest").toString
-  }
+  private[graft] def indexBase(dir: String, tag: String = "index"): String =
+    Scratch.dir(dir, s"ivfpq_$tag")
 
   /** Train + encode + write the IVF-PQ index tables (see
     * [[ivfPqIndexRoundtrip]] for the layout). The lists table stores
@@ -1566,14 +1561,16 @@ object VectorOps {
     * the batch as absent. Overwrite semantics are preserved exactly by
     * DELETING the location (the last admitted content of this batch is
     * "nothing"), which [[searchStored]]'s committed-table filter then
-    * skips.
+    * skips. The emptiness probe reads the delta without its
+    * repartitions (a spread delta, e.g. from [[embDistributed]], would
+    * otherwise run a shuffle map stage just to find one row).
     */
   private[graft] def ivfPqAddBatch(
       spark: SparkSession, dir: String, base: String,
       deltaFrame: DataFrame, sub: String): Unit =
       withWriterLease(spark, base) {
     val delta = deltaFrame.select(col("vec_id"), col("embedding"), col("label"))
-    if (delta.isEmpty) {
+    if (org.apache.spark.sql.graftbridge.withoutRepartitions(delta).isEmpty) {
       val p = new org.apache.hadoop.fs.Path(s"$base/$sub")
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.delete(p, true)

@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.Paths
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 
 /** Small-file compaction — the landing-zone maintenance rewrite every
   * 100 TB pipeline runs continuously: streaming sinks and per-batch
@@ -82,12 +80,6 @@ object Compact {
       f.isFile && f.getPath.getName.endsWith(".parquet"))
   }
 
-  private def tmpBase(dir: String, tag: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Paths.get(sys.props("java.io.tmpdir"), s"graft_${tag}_$digest").toString
-  }
-
   /** Oracle roundtrip: land lineitem as [[SmallFiles]] deliberately
     * tiny files, compact, aggregate the compacted read-back. The
     * oracle recomputes the aggregate from the flat source, so any row
@@ -96,8 +88,8 @@ object Compact {
     * the bin plan, zero shuffle, per-file size bound).
     */
   def compactRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val many = tmpBase(dir, "compact_many")
-    val out = tmpBase(dir, "compact_out")
+    val many = Scratch.dir(dir, "compact_many")
+    val out = Scratch.dir(dir, "compact_out")
     Tables.load(spark, dir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_returnflag", "l_extendedprice")
       .repartition(SmallFiles)

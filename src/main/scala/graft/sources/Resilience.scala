@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 import graft.operators.Ingestion
 
 /** Failure-surface contracts: what the engine does with STRUCTURALLY
@@ -21,12 +21,6 @@ import graft.operators.Ingestion
   */
 object Resilience {
 
-  private def tmpBase(dir: String, tag: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_${tag}_$digest").toString
-  }
-
   /** A directory scan where one shard is a TORN PARQUET (valid magic,
     * truncated body, no footer): with `ignoreCorruptFiles` the scan
     * surfaces every intact shard's rows and skips the torn one — the
@@ -38,7 +32,7 @@ object Resilience {
     * source table.
     */
   def corruptParquetScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = tmpBase(dir, "corrupt_scan")
+    val base = Scratch.dir(dir, "corrupt_scan")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
     val orders = Tables.load(spark, dir, "orders")

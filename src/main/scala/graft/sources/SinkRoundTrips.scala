@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.Paths
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 
 /** Oracle-checked ROUND TRIPS of the sink layer (SURVEY §2.1 K2/K5, plus
   * the S6 workbook writer): each builder drives a real write → read-back
@@ -19,12 +17,6 @@ import graft.{Out, Tables}
   * same paths instead of leaking copies.
   */
 object SinkRoundTrips {
-
-  private def tmpBase(dir: String, tag: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Paths.get(sys.props("java.io.tmpdir"), s"graft_${tag}_$digest").toString
-  }
 
   /** The export frame shared by the CSV and XLSX round trips: per-SKU
     * minimum offer price, price pre-rendered with a fixed two-decimal
@@ -45,7 +37,7 @@ object SinkRoundTrips {
     * which is what the plain-SQL oracle states.
     */
   def upsertRerun(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "upsert")
+    val path = Scratch.dir(dir, "upsert")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(path), true) // deterministic start state
     val orders = Tables.load(spark, dir, "orders")
@@ -64,7 +56,7 @@ object SinkRoundTrips {
     * exact schema).
     */
   def exportRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "export_csv")
+    val path = Scratch.dir(dir, "export_csv")
     Sinks.exportCsv(exportFrame(spark, dir), path, Seq("sku", "min_price"))
     val back = spark.read.option("header", "true").csv(path)
     Out.sorted(back.select(col("sku").cast("bigint").as("sku"), col("min_price")))(
@@ -80,7 +72,7 @@ object SinkRoundTrips {
     * the gate.
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "export_orc")
+    val path = Scratch.dir(dir, "export_orc")
     val frame = Tables.load(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("sku"))
       .agg(min(col("l_extendedprice")).as("min_price"),
@@ -108,7 +100,7 @@ object SinkRoundTrips {
     * filtered aggregate against the flat source.
     */
   def partitionedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "part_month")
+    val path = Scratch.dir(dir, "part_month")
     Tables.load(spark, dir, "lineitem")
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       .write.mode("overwrite").partitionBy("ship_month").parquet(path)
@@ -128,7 +120,7 @@ object SinkRoundTrips {
     * in the hash.
     */
   def overwriteRerun(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "overwrite")
+    val path = Scratch.dir(dir, "overwrite")
     val orders = Tables.load(spark, dir, "orders")
     def summary(f: DataFrame, tag: String) =
       f.groupBy(col("o_orderstatus"))
@@ -147,7 +139,7 @@ object SinkRoundTrips {
     * doubles rows.
     */
   def appendRerun(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "append")
+    val path = Scratch.dir(dir, "append")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(path), true) // deterministic start state
     val orders = Tables.load(spark, dir, "orders")
@@ -167,7 +159,7 @@ object SinkRoundTrips {
     * fidelity, pre-rendered price strings).
     */
   def jsonSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "json_sink")
+    val path = Scratch.dir(dir, "json_sink")
     val settings = Tables.load(spark, dir, "part")
       .groupBy(col("p_brand").as("brand"))
       .agg(count(lit(1)).as("n_parts"),
@@ -189,7 +181,7 @@ object SinkRoundTrips {
     * contract to modification time, the thing S3 actually selects on.
     */
   def newestSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val base = tmpBase(dir, "snaps")
+    val base = Scratch.dir(dir, "snaps")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
     val orders = Tables.load(spark, dir, "orders")
@@ -214,7 +206,7 @@ object SinkRoundTrips {
     * back with the distributed reader, surface the same rows.
     */
   def xlsxRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "export_xlsx") + ".xlsx"
+    val path = Scratch.dir(dir, "export_xlsx") + ".xlsx"
     Excel.writeXlsx(exportFrame(spark, dir), path)
     val back = Excel.readXlsx(spark, path)
     Out.sorted(back.select(col("sku").cast("bigint").as("sku"), col("min_price")))(
@@ -231,7 +223,7 @@ object SinkRoundTrips {
     * than hashing short.
     */
   def xlsxSharded(spark: SparkSession, dir: String): DataFrame = {
-    val base = tmpBase(dir, "export_xlsx_sharded")
+    val base = Scratch.dir(dir, "export_xlsx_sharded")
     val manifest =
       Excel.writeXlsxSharded(exportFrame(spark, dir).repartition(4, col("sku")), base)
     val back = Excel.readXlsx(spark, s"$base/part-*.xlsx")
@@ -273,7 +265,7 @@ object SinkRoundTrips {
   def trainShardsRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.LongType
-    val path = tmpBase(dir, "train_shards")
+    val path = Scratch.dir(dir, "train_shards")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(path), true)
     val d = Tables.load(spark, dir, "documents").select(

@@ -102,9 +102,8 @@ object Sinks {
     * threshold inside a query builder.
     */
   def bucketedJoinRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.{Out, Tables}
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    import graft.{Out, Scratch, Tables}
+    val digest = Scratch.digest(dir)
     val liT = s"li_bkt_$digest"
     val ordT = s"ord_bkt_$digest"
     // The catalog is per-session while the managed-table LOCATION

@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.nio.file.Paths
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 
 /** Z-ORDER (Morton-curve) clustered layout + row-group skipping — the
   * multi-dimensional data-layout decision at 100 TB. A fact table
@@ -120,12 +118,6 @@ object ZOrder {
     */
   val ZFiles = 32
 
-  private def tmpBase(dir: String, tag: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Paths.get(sys.props("java.io.tmpdir"), s"graft_${tag}_$digest").toString
-  }
-
   /** Z-ordered LAYOUT round trip: rewrite lineitem clustered on
     * (l_partkey, l_suppkey), read it back through the statistics-pruned
     * scan with the box filter, aggregate. The oracle recomputes the
@@ -136,7 +128,7 @@ object ZOrder {
     * scan as PushedFilters.
     */
   def zorderRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpBase(dir, "zorder")
+    val path = Scratch.dir(dir, "zorder")
     zorderWrite(
       Tables.load(spark, dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_returnflag", "l_extendedprice"),

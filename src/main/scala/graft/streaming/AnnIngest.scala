@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.operators.VectorOps
 
@@ -68,20 +68,19 @@ object AnnIngest {
   def start(spark: SparkSession, landingDir: String, base: String,
             checkpointDir: String,
             compactEvery: Int = CompactEvery): StreamingQuery =
-    spark.readStream
-      .schema(VecSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch.sparkSession, landingDir, base, batch, batchId,
-          compactEvery,
-          streamIdentity(batch.sparkSession, checkpointDir))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateStores.start(spark,
+      spark.readStream
+        .schema(VecSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landingDir)
+        .writeStream
+        .outputMode(OutputMode.Update)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          admit(batch.sparkSession, landingDir, base, batch, batchId,
+            compactEvery,
+            streamIdentity(batch.sparkSession, checkpointDir))
+        },
+      checkpointDir, StateStores.SessionDefault)
 
   /** One micro-batch admission — the foreachBatch body, named so the
     * crash-window spec can replay it with a chosen batch id. The
@@ -210,7 +209,7 @@ object AnnIngest {
     * q_ann_index_add_batch (admit).
     */
   def annIngestStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = StreamOracle.freshTmp(spark, dir, "annin")
+    val tmp = graft.Scratch.fresh(spark, dir, "annin_q")
     val base = s"$tmp/index"
     val corpus = VectorOps.embDistributed(spark, dir)
     val held = Seq(VectorOps.AddResidue, VectorOps.AddResidue2)

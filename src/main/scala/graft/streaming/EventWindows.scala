@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Event-time tumbling-window aggregation with a watermark.
@@ -57,20 +57,17 @@ object EventWindows {
     * append sink (only finalized windows are written).
     */
   def start(spark: SparkSession, landingDir: String, outDir: String,
-            checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    windowed(
-      spark.readStream
-        .schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landingDir)
-        .withWatermark("ts", Watermark))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      windowed(
+        spark.readStream
+          .schema(eventSchema)
+          .option("maxFilesPerTrigger", 1)
+          .json(landingDir)
+          .withWatermark("ts", Watermark))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.functions.F
@@ -85,8 +85,8 @@ object Repricer {
     * dimension, and return the decision log — the driver gate hashes
     * the END-TO-END streaming path (landing ingest → ignored-merchant
     * drop → lowest-comp → clamp+hysteresis target → JSONL action log),
-    * not just the batch helper. The tmp location is digest-keyed and
-    * wiped per call, same policy as Sessions.eventSessionsStream.
+    * not just the batch helper. The tmp location is
+    * [[graft.Scratch.fresh]]: digest-keyed and wiped per call.
     */
   /** Landing-shard count for the oracle rows: the NDJSON landing write
     * is corpus-sized, and a single-file landing serializes the whole
@@ -98,12 +98,7 @@ object Repricer {
   val LandingShards = 16
 
   def repricerActions(spark: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tmp = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_repricer_q_$digest").toString
-    val hp = new org.apache.hadoop.fs.Path(tmp)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val tmp = graft.Scratch.fresh(spark, dir, "repricer_q")
     val (landing, actions, ckpt) = (s"$tmp/landing", s"$tmp/actions", s"$tmp/ckpt")
     graft.Tables.load(spark, dir, "lineitem")
       .select(col("l_partkey").as("sku"),
@@ -117,12 +112,8 @@ object Repricer {
       F.roundHalfUp(col("p_retailprice") * 1.2, 2).as("max_price"),
       lit(50.0).as("step"))
     // no per-trigger file cap: the whole landing is ONE logical batch
-    val q = start(spark, landing, settings, Seq("7"), actions, ckpt,
-      maxFilesPerTrigger = None)
-    if (!q.awaitTermination(300000L)) {
-      q.stop()
-      throw new IllegalStateException("repricer stream did not finish")
-    }
+    StreamOracle.drain(start(spark, landing, settings, Seq("7"), actions, ckpt,
+      maxFilesPerTrigger = None), "repricer")
     val r = spark.read
       .schema("sku LONG, current_price DOUBLE, lowest_comp DOUBLE, target_price DOUBLE")
       .json(actions)
@@ -160,13 +151,9 @@ object Repricer {
     * gate, not just spec'd.
     */
   def repricerStream(spark: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tmp = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_repricer_s_$digest").toString
-    val hp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(hp, true)
+    val tmp = graft.Scratch.fresh(spark, dir, "repricer_s")
+    val fs = new org.apache.hadoop.fs.Path(tmp)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (landing, actions, ckpt) = (s"$tmp/landing", s"$tmp/actions", s"$tmp/ckpt")
     val offers = graft.Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey").as("sku"),
@@ -206,12 +193,8 @@ object Repricer {
             throw new java.io.IOException(s"rename $part -> $dest failed")
         }
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      val q = start(spark, landing, settings, Seq("7"), actions, ckpt,
-        clock, maxFilesPerTrigger = None)
-      if (!q.awaitTermination(300000L)) {
-        q.stop()
-        throw new IllegalStateException(s"repricer stream batch $k did not finish")
-      }
+      StreamOracle.drain(start(spark, landing, settings, Seq("7"), actions, ckpt,
+        clock, maxFilesPerTrigger = None), s"repricer batch $k")
     }
     val r = spark.read
       .schema("sku LONG, current_price DOUBLE, lowest_comp DOUBLE, " +
@@ -231,22 +214,20 @@ object Repricer {
             checkpointDir: String,
             clock: () => Long = () => System.currentTimeMillis(),
             maxFilesPerTrigger: Option[Int] = Some(1)): StreamingQuery = {
-    StateStores.useRocksDb(spark)
     val reader = spark.readStream.schema(offerSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.json(landingDir)
-      .writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val now = clock()
-        computeActions(batch, settings, ignoredMerchants,
-            lastActionTs(batch.sparkSession, actionsDir), now)
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("action_ts", lit(now))
-          .write.mode(SaveMode.Append).json(actionsDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateStores.start(spark,
+      reader.json(landingDir)
+        .writeStream
+        .outputMode(OutputMode.Update)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val now = clock()
+          computeActions(batch, settings, ignoredMerchants,
+              lastActionTs(batch.sparkSession, actionsDir), now)
+            .withColumn("batch_id", lit(batchId))
+            .withColumn("action_ts", lit(now))
+            .write.mode(SaveMode.Append).json(actionsDir)
+        },
+      checkpointDir, StateStores.SessionDefault)
   }
 }

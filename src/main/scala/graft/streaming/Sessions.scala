@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Sessionization: group each event_type's events into activity
   * sessions separated by ≥ [[GapMinutes]] of silence.
@@ -65,15 +65,7 @@ object Sessions {
     * millisecond watermark tracking).
     */
   def eventSessionsStream(spark: SparkSession, dir: String): DataFrame = {
-    // Fixed per (tmpdir, corpus dir) and wiped at the start of each call:
-    // repeated verify/bench invocations reuse one location instead of
-    // leaking a full NDJSON copy of the events table per call.
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tmp = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_sessions_q_$digest").toString
-    val hp = new org.apache.hadoop.fs.Path(tmp)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val tmp = graft.Scratch.fresh(spark, dir, "sessions_q")
     val (landing, out, ckpt) =
       (s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt")
     // one landing file = one data batch: the watermark is still at its
@@ -86,13 +78,7 @@ object Sessions {
       .write
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .json(landing)
-    StreamOracle.withLandedPartitions(spark, landing) {
-      val q = start(spark, landing, out, ckpt)
-      if (!q.awaitTermination(300000L)) {
-        q.stop()
-        throw new IllegalStateException("sessions stream did not finish")
-      }
-    }
+    StreamOracle.drain(start(spark, landing, out, ckpt), "sessions")
     val r = spark.read
       .schema("session_start STRING, event_type STRING, n_events LONG")
       .json(out)
@@ -104,25 +90,22 @@ object Sessions {
     * (only watermark-finalized sessions are written).
     */
   def start(spark: SparkSession, landingDir: String, outDir: String,
-            checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    spark.readStream
-      .schema(EventWindows.eventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
-      .withWatermark("ts", Watermark)
-      .groupBy(session_window(col("ts"), Gap), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("session_start"),
-        col("event_type"), col("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      spark.readStream
+        .schema(EventWindows.eventSchema)
+        .option("maxFilesPerTrigger", 1)
+        .json(landingDir)
+        .withWatermark("ts", Watermark)
+        .groupBy(session_window(col("ts"), Gap), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(
+          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("session_start"),
+          col("event_type"), col("n_events"))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
 }

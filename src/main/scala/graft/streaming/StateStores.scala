@@ -1,13 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** State-store configuration shared by every streaming job start.
+/** The engine's stream policy, in one place: every stream job hands its
+  * configured writer to [[start]], which runs it as an AvailableNow
+  * drain on the RocksDB state store at the job's state-partition
+  * regime.
   *
-  * All stateful streams in the engine (watch-window ring buffers, dedup
-  * key sets, near-dup band buckets, sketch registers, sessionization,
-  * CDC fold, stream-stream join buffers) run on the RocksDB state store
-  * provider rather than the default HDFS-backed in-memory map: at the
+  * RocksDB rather than the default HDFS-backed in-memory map: at the
   * key cardinalities a 100-TB deployment carries (one entry per SKU /
   * dedup key / band bucket), per-key state must spill to executor-local
   * disk instead of competing with execution memory on-heap — RocksDB is
@@ -17,31 +18,93 @@ import org.apache.spark.sql.SparkSession
   * difference between a streaming job that keeps up and one that falls
   * behind as state grows.
   *
-  * Correctness is provider-independent — the stream==batch oracle rows
-  * (q_watch_stream, q_dedup_stream, q_cdc_stream, …) and every
-  * streaming spec run through this helper, so the whole streaming gate
-  * re-proves the contracts under RocksDB on every run.
+  * No drain mutates the shared session. [[start]] sets its keys only
+  * while `start()` runs and restores them as soon as it returns. That
+  * is enough because Spark's `StreamExecution` clones the session in
+  * its constructor (`sparkSessionForStream`, built inside `start()`):
+  * every micro-batch plans on the clone, and `offsets/0` records the
+  * clone's conf, so the stream keeps the narrowed partition count and
+  * the RocksDB provider for its whole life while batch work on the
+  * shared session — during the drain or after it — sees the session's
+  * own values. A separate `spark.newSession()` per drain would isolate
+  * too, but its streaming listeners and runtime-registered functions
+  * are its own, so Bench's `batches` / `sec_per_batch` would read 0.
+  *
+  * Correctness is provider- and partition-count-independent — the
+  * stream==batch oracle rows (q_watch_stream, q_dedup_stream,
+  * q_cdc_stream, …) and every streaming spec start through here, so the
+  * whole streaming gate re-proves the contracts under RocksDB on every
+  * run.
   */
 object StateStores {
 
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Flip the session to RocksDB state stores (idempotent; streaming
-    * queries capture the conf at `start()`).
-    */
-  def useRocksDb(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
+  /** The state-store keys every stream starts with. */
+  private[graft] val RocksDbConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     // Observability-only row counting: every put/remove pays a point
     // lookup just to keep the numRowsTotal METRIC exact. Spark's own
     // tuning guide lists turning it off as the first RocksDB knob for
     // update-heavy workloads; no query result depends on the metric.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      "false")
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** A stream job's state-partition regime: the
+    * `spark.sql.shuffle.partitions` its start freezes into the
+    * checkpoint as the state-store count. Each job runs in exactly one.
+    */
+  sealed trait Regime
+
+  /** The session's own count. For foreachBatch jobs (sketch
+    * maintenance, repricer, ANN ingest): no state stores at all, and
+    * narrowing only cuts the per-batch merge jobs' reduce parallelism
+    * (kmv regressed 1.5×).
+    */
+  case object SessionDefault extends Regime
+
+  /** [[statePartitionsFor]] the bytes landed under `landingDir`: drains
+    * whose per-batch work is state-store machinery, i.e. whose per-row
+    * state work is a hash-aggregate update. They regress at ANY
+    * widening past the byte rule (q_cdc_stream_late 4.50 → 9.22 s at
+    * 8, r16).
+    */
+  final case class LandedBytes(landingDir: String) extends Regime
+
+  /** [[cpuBoundStateParts]]: per-key CPU folds (stream-stream join
+    * bucket scans, the watch/near-dup state machines), which the byte
+    * rule serializes (watch measured 9.5 → 26.5 s at 1 partition;
+    * neardup sf1 37.1 s derived vs ~22 s at 8-32; the interval joins
+    * 6.3-8.0 s derived vs 4.1-6.5 s at 8, r16).
+    */
+  case object CpuBound extends Regime
+
+  /** Start `writer` as an AvailableNow drain checkpointed at
+    * `checkpointDir`, with [[RocksDbConf]] and the regime's partition
+    * count set on the session for the duration of `start()` only —
+    * every key it touched is back to its prior value (or unset again)
+    * when this returns; see the object doc for why that is enough.
+    */
+  def start(spark: SparkSession, writer: DataStreamWriter[_],
+      checkpointDir: String, regime: Regime): StreamingQuery = {
+    val parts = regime match {
+      case SessionDefault => None
+      case LandedBytes(dir) => Some(statePartitionsFor(landedBytes(spark, dir)))
+      case CpuBound => Some(cpuBoundStateParts(spark))
+    }
+    val keys = RocksDbConf ++ parts.map(n => ShufflePartitions -> n.toString)
+    val before = spark.conf.getAll
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    finally keys.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   /** Landed-input bytes per state partition the sizing rule assumes.
@@ -51,24 +114,21 @@ object StateStores {
     */
   val BytesPerStatePartition: Long = 32L * 1024 * 1024
 
-  /** Hard ceiling on DERIVED state partitions (override
-    * `graft.stream.statePartitions` wins outright): state partitions
-    * are frozen into a checkpoint for its lifetime, so production
+  /** Hard ceiling on derived state partitions: state partitions are
+    * frozen into a checkpoint for its lifetime, so production
     * deployments over-provision but not unboundedly — 4096 partitions
-    * at 32 MB/partition sizes a ~128 GB-per-cycle landing; past that,
-    * raise the explicit conf at deploy time.
+    * at 32 MB/partition sizes a ~128 GB-per-cycle landing.
     */
   val MaxDerivedStatePartitions = 4096
 
-  /** Total bytes under the given landing paths (driver-side metadata
-    * listing, zero Spark jobs — the ParquetMeta discipline).
+  /** Total bytes under a landing path (driver-side metadata listing,
+    * zero Spark jobs — the ParquetMeta discipline).
     */
-  def landedBytes(spark: SparkSession, paths: String*): Long =
-    paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-    }.sum
+  def landedBytes(spark: SparkSession, path: String): Long = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
+  }
 
   /** SCALE-ADAPTIVE state partition count for a streaming drain —
     * guide §2: derive partitioning from input size instead of pinning
@@ -84,19 +144,13 @@ object StateStores {
     * fixed count chokes at warehouse volume. The rule here is the one
     * production uses for topic sizing: partitions ∝ landed volume
     * ([[BytesPerStatePartition]]), floor 1, ceiling
-    * [[MaxDerivedStatePartitions]], explicit override
-    * `graft.stream.statePartitions` for deployments that know their
-    * state better than their landing (e.g. high-cardinality state fed
-    * by a narrow stream).
+    * [[MaxDerivedStatePartitions]].
     */
-  def statePartitionsFor(spark: SparkSession, inputBytes: Long): Int =
-    spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.toInt)
-      .getOrElse {
-        val derived =
-          (inputBytes + BytesPerStatePartition - 1) / BytesPerStatePartition
-        derived.max(1L).min(MaxDerivedStatePartitions.toLong).toInt
-      }
+  def statePartitionsFor(inputBytes: Long): Int = {
+    val derived =
+      (inputBytes + BytesPerStatePartition - 1) / BytesPerStatePartition
+    derived.max(1L).min(MaxDerivedStatePartitions.toLong).toInt
+  }
 
   /** State partitions for CPU-BOUND per-key folds — the second measured
     * regime of the partitioning law (r15 found it, r16 classified it).
@@ -111,55 +165,15 @@ object StateStores {
     * (q_cdc_stream_late 4.50 → 9.22 s: per-partition store machinery
     * dominates their trivial per-row work). Bounded by
     * [[CpuBoundStateParts]] because state partitions freeze into the
-    * checkpoint: at 100 TB the conf override (same key as the byte
-    * rule) sizes the join by its measured per-key compute, and the r15
-    * sf1 cross-check showed the bound flat 8→32 (neardup 21.7 vs
-    * 21.8 s).
+    * checkpoint; the r15 sf1 cross-check showed the bound flat 8→32
+    * (neardup 21.7 vs 21.8 s).
     */
   def cpuBoundStateParts(spark: SparkSession): Int =
-    spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.toInt)
-      .getOrElse(
-        math.min(spark.sparkContext.defaultParallelism, CpuBoundStateParts))
+    math.min(spark.sparkContext.defaultParallelism, CpuBoundStateParts)
 
   /** Cores cap of the CPU-bound regime: past this the per-partition
     * store machinery costs more than the extra parallelism buys at any
     * measured SF (sf0.1 and sf1 both flat-to-worse 8 → 32).
     */
   val CpuBoundStateParts = 8
-
-  /** Run `body` (a stream start + drain) with
-    * `spark.sql.shuffle.partitions` set from the landing size, restoring
-    * the session's batch setting afterwards. Streaming queries capture
-    * the conf when they start, and foreachBatch bodies run on the
-    * stream's cloned session, so the narrowed setting covers exactly
-    * the drain; batch read-offs after the drain see the session value
-    * again. Correctness is partition-count-independent by the streaming
-    * determinism contracts (every stateful fold sorts within its key
-    * group; sketch merges are order-free laws) — re-proven by the
-    * stream rows' oracle gate under any partitioning.
-    */
-  def withStatePartitions[T](spark: SparkSession, inputBytes: Long)(
-      body: => T): T =
-    withShufflePartitions(spark, statePartitionsFor(spark, inputBytes))(body)
-
-  /** [[withStatePartitions]]'s twin for the CPU-bound regime — see
-    * [[cpuBoundStateParts]]. */
-  def withCpuBoundPartitions[T](spark: SparkSession)(body: => T): T =
-    withShufflePartitions(spark, cpuBoundStateParts(spark))(body)
-
-  /** NOTE: this mutates the SHARED session's `spark.sql.shuffle.partitions`
-    * for the drain's duration — safe while drains are strictly sequential
-    * per session (the engine's contract: every entry point runs its
-    * streams to completion before returning). A concurrent batch job or
-    * second stream started on the same session inside the window would
-    * silently capture the narrowed count.
-    */
-  private def withShufflePartitions[T](spark: SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Streaming CDC log compaction — the continuous face of
@@ -81,21 +81,19 @@ object StreamCdc {
             checkpointDir: String,
             maxFilesPerTrigger: Option[Int] = Some(1)): StreamingQuery = {
     import spark.implicits._
-    StateStores.useRocksDb(spark)
     val reader = spark.readStream.schema(opSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    compacted(
-      reader
-        .json(landingDir)
-        .filter(col("event_type").isin("signup", "click", "error"))
-        .as[Op])
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateStores.start(spark,
+      compacted(
+        reader
+          .json(landingDir)
+          .filter(col("event_type").isin("signup", "click", "error"))
+          .as[Op])
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
   }
 
   /** Read-back materialization: newest emission per key, deletes drop

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.operators.TextOps
@@ -46,19 +46,16 @@ object StreamDedup {
 
   /** Streaming job: NDJSON landing → dedup → append sink. */
   def start(spark: SparkSession, landingDir: String, outDir: String,
-            checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    deduped(
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landingDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      deduped(
+        spark.readStream
+          .schema(docSchema)
+          .option("maxFilesPerTrigger", 1)
+          .json(landingDir))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
 }

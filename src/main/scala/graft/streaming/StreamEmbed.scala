@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.VectorOps
 
@@ -207,20 +207,18 @@ object StreamEmbed {
   def start(spark: SparkSession, landingDir: String, outDir: String,
             checkpointDir: String, nPlanes: Int = VectorOps.NPlanes,
             maxResidents: Int = MaxBucketResidents): StreamingQuery = {
-    StateStores.useRocksDb(spark)
     guardKnobs(spark, checkpointDir, nPlanes, maxResidents)
-    pairs(
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landingDir),
-      nPlanes, maxResidents)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateStores.start(spark,
+      pairs(
+        spark.readStream
+          .schema(docSchema)
+          .option("maxFilesPerTrigger", 1)
+          .json(landingDir),
+        nPlanes, maxResidents)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Streaming funnel attribution — the continuous face of the batch
@@ -85,19 +85,16 @@ object StreamFunnel {
 
   /** Streaming job: NDJSON landing → funnel progress rows → append sink. */
   def start(spark: SparkSession, landingDir: String, outDir: String,
-            checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    funnel(
-      spark.readStream
-        .schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landingDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      funnel(
+        spark.readStream
+          .schema(eventSchema)
+          .option("maxFilesPerTrigger", 1)
+          .json(landingDir))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.LandedBytes(landingDir))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Stream-stream interval join: competitor price observations joined to
@@ -114,21 +114,21 @@ object StreamJoin {
   /** Streaming job over two NDJSON landing dirs → append sink. */
   def start(spark: SparkSession, obsDir: String, actionsDir: String,
             outDir: String, checkpointDir: String,
-            window: String = ResponseWindow): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    def src(dir: String, schema: StructType) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", LandingFilesPerSide).json(dir)
-        .withWatermark("ts", Watermark)
-    joined(src(obsDir, obsSchema), src(actionsDir, actionSchema), window)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            window: String = ResponseWindow): StreamingQuery =
+    StateStores.start(spark,
+      joined(src(spark, obsDir, obsSchema), src(spark, actionsDir, actionSchema),
+          window)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.CpuBound)
+
+  /** One landing side: whole-side triggers under the join watermark. */
+  private def src(spark: SparkSession, dir: String, schema: StructType) =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", LandingFilesPerSide).json(dir)
+      .withWatermark("ts", Watermark)
 
   /** Landing files per join side: written in parallel, ingested whole
     * per trigger — each side still lands in ONE micro-batch (a join is
@@ -186,19 +186,13 @@ object StreamJoin {
 
   /** Streaming job for the binned twin: same landings → append sink. */
   def startBinned(spark: SparkSession, obsDir: String, actionsDir: String,
-                  outDir: String, checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    def src(dir: String, schema: StructType) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", LandingFilesPerSide).json(dir)
-        .withWatermark("ts", Watermark)
-    binnedJoined(src(obsDir, obsSchema), src(actionsDir, actionSchema))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                  outDir: String, checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      binnedJoined(src(spark, obsDir, obsSchema),
+          src(spark, actionsDir, actionSchema))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.CpuBound)
 }

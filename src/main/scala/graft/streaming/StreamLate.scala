@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 import graft.operators.TextOps
 
 /** Late-data driver-oracle rows for the streaming suite.
@@ -155,14 +155,12 @@ object StreamLate {
     * out-of-order-kept rows must merge into windows opened by earlier
     * batches. */
   def windowsStreamLate(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = StreamOracle.freshTmp(spark, dir, "winlate")
+    val tmp = Scratch.fresh(spark, dir, "winlate_q")
     landBatches(spark, eventFrame(spark, dir),
       StreamOracle.LandingFiles, s"$tmp/landing")
-    StreamOracle.withLandedPartitions(spark, s"$tmp/landing") {
-      StreamOracle.drain(
-        EventWindows.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "late windows")
-    }
+    StreamOracle.drain(
+      EventWindows.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "late windows")
     val r = spark.read
       .schema("window_start STRING, event_type STRING, n_events LONG")
       .json(s"$tmp/out")
@@ -175,14 +173,12 @@ object StreamLate {
     * b+1's out-of-order-kept rows (cross-batch merge), too-late rows
     * must not found sessions of their own. */
   def sessionsStreamLate(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = StreamOracle.freshTmp(spark, dir, "seslate")
+    val tmp = Scratch.fresh(spark, dir, "seslate_q")
     landBatches(spark, eventFrame(spark, dir),
       StreamOracle.LandingFiles, s"$tmp/landing")
-    StreamOracle.withLandedPartitions(spark, s"$tmp/landing") {
-      StreamOracle.drain(
-        Sessions.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "late sessions")
-    }
+    StreamOracle.drain(
+      Sessions.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "late sessions")
     val r = spark.read
       .schema("session_start STRING, event_type STRING, n_events LONG")
       .json(s"$tmp/out")
@@ -221,7 +217,7 @@ object StreamLate {
     *     watermark — it must NOT re-emit.
     */
   def dedupStreamLate(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = StreamOracle.freshTmp(spark, dir, "dedlate")
+    val tmp = Scratch.fresh(spark, dir, "dedlate_q")
     val docs = Tables.load(spark, dir, "documents")
       .withColumn("bow_hash", TextOps.bowHash)
     val canon = docs.groupBy(col("bow_hash"))
@@ -246,11 +242,9 @@ object StreamLate {
     landBatches(spark,
       all.select(col("doc_id"), col("ts"), col("text"), col("batch")),
       DedupBatches, s"$tmp/landing")
-    StreamOracle.withLandedPartitions(spark, s"$tmp/landing") {
-      StreamOracle.drain(
-        StreamDedup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "late dedup")
-    }
+    StreamOracle.drain(
+      StreamDedup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "late dedup")
     val r = spark.read
       .schema("bow_hash STRING, doc_id LONG, ts TIMESTAMP")
       .json(s"$tmp/out")
@@ -281,7 +275,7 @@ object StreamLate {
     * — [[landBatches]]' single-file mtime protocol stays with the rows
     * whose watermark progression depends on batch boundaries. */
   def cdcStreamLate(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = StreamOracle.freshTmp(spark, dir, "cdclate")
+    val tmp = Scratch.fresh(spark, dir, "cdclate_q")
     val landing = new Path(s"$tmp/landing")
     val fs = landing.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(landing)
@@ -314,12 +308,10 @@ object StreamLate {
             throw new java.io.IOException(s"rename $part -> $dst failed")
         }
       fs.delete(staging, true)
-      StreamOracle.withLandedPartitions(spark, s"$tmp/landing") {
-        StreamOracle.drain(
-          StreamCdc.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
-            maxFilesPerTrigger = None),
-          s"late cdc drain $k")
-      }
+      StreamOracle.drain(
+        StreamCdc.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
+          maxFilesPerTrigger = None),
+        s"late cdc drain $k")
     }
     val r = StreamCdc.materialize(spark, s"$tmp/out")
     Out.sorted(r)(col("user_id"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.TextOps
@@ -185,19 +185,16 @@ object StreamNearDup {
 
   /** Streaming job: NDJSON landing → near-dup pairs → append sink. */
   def start(spark: SparkSession, landingDir: String, outDir: String,
-            checkpointDir: String): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    pairs(
-      spark.readStream
-        .schema(StreamDedup.docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landingDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            checkpointDir: String): StreamingQuery =
+    StateStores.start(spark,
+      pairs(
+        spark.readStream
+          .schema(StreamDedup.docSchema)
+          .option("maxFilesPerTrigger", 1)
+          .json(landingDir))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir),
+      checkpointDir, StateStores.CpuBound)
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{Out, Tables}
+import graft.{Out, Scratch, Tables}
 import graft.operators.{Sketches, TextOps}
 import graft.sources.ParquetMeta
 
@@ -52,56 +51,11 @@ object StreamOracle {
 
   private def constTs = lit(ConstTs).cast("timestamp").as("ts")
 
-  /** Fresh per-(tmpdir, corpus-dir) working root, wiped at the start of
-    * each call so repeated verify/bench invocations reuse one location
-    * instead of leaking a landing copy per call.
-    */
-  private[streaming] def freshTmp(spark: SparkSession, dir: String, tag: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tmp = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_${tag}_q_$digest").toString
-    val hp = new Path(tmp)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-    tmp
-  }
-
   private[streaming] def drain(q: StreamingQuery, what: String): Unit =
     if (!q.awaitTermination(300000L)) {
       q.stop()
       throw new IllegalStateException(s"$what stream did not finish")
     }
-
-  /** Run a stream start+drain at the scale-adaptive state partition
-    * count derived from the landed input under `paths` — see
-    * [[StateStores.withStatePartitions]].
-    *
-    * Use for STATEFUL drains whose per-batch work is dominated by
-    * state-store machinery — i.e. whose per-row state work is a
-    * hash-aggregate update. Drains in the OTHER measured regime go
-    * through [[withCpuBoundPartitions]] instead: per-key CPU folds
-    * (stream-stream join bucket scans, the watch/near-dup state
-    * machines) serialize under the byte rule (watch measured
-    * 9.5 → 26.5 s at 1 partition; neardup sf1 37.1 s derived vs ~22 s
-    * at 8-32; the interval joins 6.3-8.0 s derived vs 4.1-6.5 s at 8,
-    * r16) while the hash-agg drains regress at ANY widening past the
-    * byte rule (q_cdc_stream_late 4.50 → 9.22 s at 8, r16). One
-    * measured exception keeps the session default outright: foreachBatch
-    * sketch maintenance (no state stores at all — narrowing only cuts
-    * the per-batch merge jobs' reduce parallelism; kmv regressed 1.5×).
-    */
-  private[streaming] def withLandedPartitions[T](
-      spark: SparkSession, paths: String*)(body: => T): T =
-    StateStores.withStatePartitions(
-      spark, StateStores.landedBytes(spark, paths: _*))(body)
-
-  /** Run a stream start+drain at the CPU-bound state-partition count —
-    * [[StateStores.cpuBoundStateParts]]; see [[withLandedPartitions]]
-    * for the regime classification and its measurements.
-    */
-  private[streaming] def withCpuBoundPartitions[T](
-      spark: SparkSession)(body: => T): T =
-    StateStores.withCpuBoundPartitions(spark)(body)
 
   /** Land a single-column long frame as [[LandingFiles]] NDJSON files. */
   private def landKeys(df: DataFrame, landing: String): Unit =
@@ -112,7 +66,7 @@ object StreamOracle {
     * the batch heavy-hitter read-off over the streamed sketch.
     */
   def cmsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "cms")
+    val tmp = Scratch.fresh(spark, dir, "cms_q")
     val keys = Tables.load(spark, dir, "lineitem")
       .select(col("l_partkey").as("key"))
     landKeys(keys, s"$tmp/landing")
@@ -126,7 +80,7 @@ object StreamOracle {
     * register table.
     */
   def hllStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "hll")
+    val tmp = Scratch.fresh(spark, dir, "hll_q")
     val keys = Tables.load(spark, dir, "orders")
       .select(col("o_custkey").as("key"))
     landKeys(keys, s"$tmp/landing")
@@ -140,7 +94,7 @@ object StreamOracle {
     * k-minimum table.
     */
   def kmvStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "kmv")
+    val tmp = Scratch.fresh(spark, dir, "kmv_q")
     val keys = Tables.load(spark, dir, "orders")
       .select(col("o_custkey").as("key"))
     landKeys(keys, s"$tmp/landing")
@@ -155,7 +109,7 @@ object StreamOracle {
     * [[Sketches.StreamHistLoCents]]..[[Sketches.StreamHistHiCents]]).
     */
   def histogramStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "hist")
+    val tmp = Scratch.fresh(spark, dir, "hist_q")
     val cents = Tables.load(spark, dir, "lineitem")
       .select(floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("c"))
     landKeys(cents, s"$tmp/landing")
@@ -174,14 +128,12 @@ object StreamOracle {
     * batch produce the same HASH, not just the same spec.
     */
   def cdcStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "cdc")
+    val tmp = Scratch.fresh(spark, dir, "cdc_q")
     Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .repartition(LandingFiles).write.json(s"$tmp/landing")
-    withLandedPartitions(spark, s"$tmp/landing") {
-      drain(StreamCdc.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "cdc")
-    }
+    drain(StreamCdc.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "cdc")
     val r = StreamCdc.materialize(spark, s"$tmp/out")
     Out.sorted(r)(col("user_id"))
   }
@@ -192,14 +144,12 @@ object StreamOracle {
     * projection of the first-seen stream.
     */
   def dedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "dedup")
+    val tmp = Scratch.fresh(spark, dir, "dedup_q")
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"), constTs, col("text"))
       .repartition(LandingFiles).write.json(s"$tmp/landing")
-    withLandedPartitions(spark, s"$tmp/landing") {
-      drain(StreamDedup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "dedup")
-    }
+    drain(StreamDedup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "dedup")
     val r = spark.read.schema("bow_hash STRING").json(s"$tmp/out")
       .select("bow_hash")
     Out.sorted(r)(col("bow_hash"))
@@ -212,18 +162,12 @@ object StreamOracle {
     * doc for why the set is deterministic on this corpus.
     */
   def neardupStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "neardup")
+    val tmp = Scratch.fresh(spark, dir, "neardup_q")
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"), constTs, col("text"))
       .repartition(LandingFiles).write.json(s"$tmp/landing")
-    // CPU-bound regime (see withLandedPartitions): the per-bucket
-    // CloneGroup state machine is per-key compute, which the byte rule
-    // starves as volume grows (sf1: 37.1 s derived vs 21.7 s at 8 and
-    // 21.8 s at 32 partitions, min-of-3 isolated).
-    withCpuBoundPartitions(spark) {
-      drain(StreamNearDup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "neardup")
-    }
+    drain(StreamNearDup.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "neardup")
     val r = spark.read
       .schema("doc_a LONG, doc_b LONG, jaccard DOUBLE, band_idx INT")
       .json(s"$tmp/out")
@@ -285,7 +229,7 @@ object StreamOracle {
 
   private def embedStreamAt(spark: SparkSession, dir: String, nPlanes: Int,
       cap: Int, tag: String, files: Int): DataFrame = {
-    val tmp = freshTmp(spark, dir, tag)
+    val tmp = Scratch.fresh(spark, dir, s"${tag}_q")
     val vecs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), constTs,
         transform(col("embedding"), _.cast("double")).as("embedding"))
@@ -313,10 +257,8 @@ object StreamOracle {
       math.max(cap, 4L * occ).min(Int.MaxValue).toInt
     }
     vecs.repartition(files).write.json(s"$tmp/landing")
-    withLandedPartitions(spark, s"$tmp/landing") {
-      drain(StreamEmbed.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
-        nPlanes, effCap), tag)
-    }
+    drain(StreamEmbed.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
+      nPlanes, effCap), tag)
     val r = spark.read
       .schema("vec_a LONG, vec_b LONG, cos_sim DOUBLE")
       .json(s"$tmp/out")
@@ -334,16 +276,14 @@ object StreamOracle {
     * stream/batch contract: same hash, not just same spec.
     */
   def funnelStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "funnel")
+    val tmp = Scratch.fresh(spark, dir, "funnel_q")
     Tables.load(spark, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .coalesce(1).write
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .json(s"$tmp/landing")
-    withLandedPartitions(spark, s"$tmp/landing") {
-      drain(StreamFunnel.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "funnel")
-    }
+    drain(StreamFunnel.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "funnel")
     val r = spark.read
       .schema("user_id LONG, stage LONG, view_us LONG, click_us LONG, " +
         "purchase_us LONG, n_seen LONG")
@@ -371,7 +311,7 @@ object StreamOracle {
     * plain SQL windows.
     */
   def watchStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "watch")
+    val tmp = Scratch.fresh(spark, dir, "watch_q")
     Tables.load(spark, dir, "events")
       .select(expr("event_id DIV 200").as("capture_id"),
         struct(col("event_id"), col("user_id"), col("value")).as("o"))
@@ -381,14 +321,8 @@ object StreamOracle {
     // TTL off for the finite drain: with ProcessingTimeTimeout armed an
     // AvailableNow run cannot terminate before the whole TTL elapses
     // (see WatchStream.start's doc); expiry is WatchStreamSpec's test.
-    // CPU-bound regime (see withLandedPartitions): the per-key state
-    // machine is the CPU — one landing file would derive 1 partition
-    // and serialize it (measured 9.5 → 26.5 s at 1 in r15; 5.7 s at 8
-    // vs 6.2 s at the 32-core session default, same-run r16 A/B).
-    withCpuBoundPartitions(spark) {
-      drain(WatchStream.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
-        stateTtl = None), "watch")
-    }
+    drain(WatchStream.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
+      stateTtl = None), "watch")
     val r = spark.read
       .schema("event_id LONG, undercut LONG, sliding_hits LONG, " +
         "is_bot BOOLEAN, user_id LONG")
@@ -407,15 +341,10 @@ object StreamOracle {
     * the oracle is the plain batch interval join over the same split.
     */
   def intervalJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "sjoin")
+    val tmp = Scratch.fresh(spark, dir, "sjoin_q")
     landJoinSides(spark, dir, tmp)
-    // CPU-bound regime (see withLandedPartitions): the symmetric join's
-    // per-row bucket scan is per-key compute — measured 6.34 s at
-    // derived(1) vs 4.77 s at 8 (sec_per_batch 2.76 -> 1.93), r16
-    withCpuBoundPartitions(spark) {
-      drain(StreamJoin.start(spark, s"$tmp/obs", s"$tmp/actions",
-        s"$tmp/out", s"$tmp/ckpt"), "interval join")
-    }
+    drain(StreamJoin.start(spark, s"$tmp/obs", s"$tmp/actions",
+      s"$tmp/out", s"$tmp/ckpt"), "interval join")
     val r = spark.read
       .schema("obs_id LONG, action_id LONG, product_id LONG, seller STRING, " +
         "price LONG, new_price LONG, response_secs LONG")
@@ -434,14 +363,11 @@ object StreamOracle {
     * join at the respective width).
     */
   def intervalJoinStreamNarrow(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "sjoinn")
+    val tmp = Scratch.fresh(spark, dir, "sjoinn_q")
     landJoinSides(spark, dir, tmp)
-    // CPU-bound regime: 6.73 s derived(1) vs 4.10 s at 8, r16
-    withCpuBoundPartitions(spark) {
-      drain(StreamJoin.start(spark, s"$tmp/obs", s"$tmp/actions",
-        s"$tmp/out", s"$tmp/ckpt", StreamJoin.ResponseWindowNarrow),
-        "interval join narrow")
-    }
+    drain(StreamJoin.start(spark, s"$tmp/obs", s"$tmp/actions",
+      s"$tmp/out", s"$tmp/ckpt", StreamJoin.ResponseWindowNarrow),
+      "interval join narrow")
     val r = spark.read
       .schema("obs_id LONG, action_id LONG, product_id LONG, seller STRING, " +
         "price LONG, new_price LONG, response_secs LONG")
@@ -488,15 +414,10 @@ object StreamOracle {
     * restricted to finalized bins.
     */
   def binnedJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "bjoin")
+    val tmp = Scratch.fresh(spark, dir, "bjoin_q")
     landJoinSides(spark, dir, tmp)
-    // CPU-bound regime: 7.96 s derived(1) vs 6.54 s at 8, r16 (the
-    // pre-aggregation shrinks the join side but the bin-min fold and
-    // join scan are still per-key compute)
-    withCpuBoundPartitions(spark) {
-      drain(StreamJoin.startBinned(spark, s"$tmp/obs", s"$tmp/actions",
-        s"$tmp/out", s"$tmp/ckpt"), "binned interval join")
-    }
+    drain(StreamJoin.startBinned(spark, s"$tmp/obs", s"$tmp/actions",
+      s"$tmp/out", s"$tmp/ckpt"), "binned interval join")
     val r = spark.read
       .schema("product_id LONG, bin_start STRING, min_price LONG, " +
         "action_id LONG, new_price LONG, response_secs LONG")
@@ -513,17 +434,15 @@ object StreamOracle {
     * windows whose end the final watermark passed.
     */
   def windowsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = freshTmp(spark, dir, "windows")
+    val tmp = Scratch.fresh(spark, dir, "windows_q")
     Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .coalesce(1)
       .write
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .json(s"$tmp/landing")
-    withLandedPartitions(spark, s"$tmp/landing") {
-      drain(EventWindows.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
-        "windows")
-    }
+    drain(EventWindows.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt"),
+      "windows")
     val r = spark.read
       .schema("window_start STRING, event_type STRING, n_events LONG")
       .json(s"$tmp/out")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.Sketches
@@ -172,18 +172,15 @@ object StreamSketch {
     */
   private def startMerge(spark: SparkSession, landingDir: String,
       checkpointDir: String, schema: StructType)(
-      merge: (DataFrame, Long) => Unit): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
-      .writeStream
-      .foreachBatch(merge)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      merge: (DataFrame, Long) => Unit): StreamingQuery =
+    StateStores.start(spark,
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(landingDir)
+        .writeStream
+        .foreachBatch(merge),
+      checkpointDir, StateStores.SessionDefault)
 
   /** Streaming job: NDJSON key landing → per-batch sketch → merge. */
   def start(spark: SparkSession, landingDir: String, sketchDir: String,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Streaming price-watch pipeline (SURVEY.md §2.8 T1–T4, T6): the Spark
@@ -142,16 +142,13 @@ object WatchStream {
     */
   def start(spark: SparkSession, landingDir: String, outDir: String,
             checkpointDir: String,
-            stateTtl: Option[String] = Some("10 minutes")): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    detectBots(flatten(readLanding(spark, landingDir)), stateTtl)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("user_id")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            stateTtl: Option[String] = Some("10 minutes")): StreamingQuery =
+    StateStores.start(spark,
+      detectBots(flatten(readLanding(spark, landingDir)), stateTtl)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("json")
+        .option("path", outDir)
+        .partitionBy("user_id"),
+      checkpointDir, StateStores.CpuBound)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Small shared helpers for the harness entrypoints and operator catalog. */
 object Out {
@@ -27,6 +27,36 @@ object Out {
     * when the returned frame is dereferenced.
     */
   def eager(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+}
+
+/** Per-corpus scratch locations under the JVM tmpdir:
+  * `graft_<name>_<digest>`. Fixed per (tmpdir, corpus dir, name), so
+  * repeated verify/bench runs reuse one location instead of leaking a
+  * copy per call. Index paths built here appear in plan dumps, so the
+  * rule must not change.
+  */
+object Scratch {
+
+  /** The corpus key: the first 4 bytes of MD5(corpus dir) in hex. Also
+    * suffixes the per-corpus warehouse table names.
+    */
+  def digest(corpus: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(corpus.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+
+  def dir(corpus: String, name: String): String =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_${name}_${digest(corpus)}").toString
+
+  /** [[dir]], wiped first: the working root of a run that rebuilds
+    * everything under it.
+    */
+  def fresh(spark: SparkSession, corpus: String, name: String): String = {
+    val d = dir(corpus, name)
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    d
+  }
 }
 
 /** Minimal JSON string escaping shared by Bench/Verify output writers.
