@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Out, Scratch, Tables}
 import graft.functions.F
-import graft.sources.ParquetMeta
+import graft.sources.{ParquetMeta, Publish}
 
 /** Similarity search over the `embeddings` table (64-dim unit-norm
   * float vectors): brute-force cosine top-k as the exact baseline, and a
@@ -1715,25 +1715,17 @@ object VectorOps {
     * the watermark, re-admission would re-commit the folded delta and
     * every (vec_id, sub) code row of the batch would exist in BOTH the
     * merged lists and the delta. [[graft.streaming.AnnIngest.admit]]
-    * skips any batch at or below the watermark. Written atomically
-    * (temp + rename) inside [[completeCompaction]] BEFORE the folded
+    * skips any batch at or below the watermark. Published through
+    * [[Publish.file]] inside [[completeCompaction]] BEFORE the folded
     * deltas' markers retire, so [[healCompaction]] finishing an
     * interrupted swap re-establishes it.
     */
   private[graft] def foldedWatermark(
-      spark: SparkSession, base: String): Long = {
-    val fs = fsOf(spark, base)
-    val p = foldedWatermarkPath(base)
-    if (!fs.exists(p)) -1L
-    else try {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"watermark"\s*:\s*(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong).getOrElse(-1L)
-    } catch { case _: java.io.IOException => -1L }
-  }
+      spark: SparkSession, base: String): Long =
+    try Publish.read(fsOf(spark, base), foldedWatermarkPath(base))
+      .flatMap(""""watermark"\s*:\s*(-?\d+)""".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong).getOrElse(-1L)
+    catch { case _: java.io.IOException => -1L }
 
   private def advanceFoldedWatermark(
       spark: SparkSession, base: String, folded: Seq[String]): Unit = {
@@ -1742,20 +1734,8 @@ object VectorOps {
     val cur = foldedWatermark(spark, base)
     val hw = streamIds.max
     if (hw <= cur) return
-    val fs = fsOf(spark, base)
-    val tmp = new org.apache.hadoop.fs.Path(base,
-      "_folded_watermark.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"watermark":$hw}\n""".getBytes("UTF-8"))
-    finally out.close()
-    val wp = foldedWatermarkPath(base)
-    if (fs.exists(wp)) fs.delete(wp, false)
-    // a racing completer of the SAME committed swap may have landed the
-    // identical watermark between our delete and rename — losing that
-    // race is success as long as the mark is at least ours
-    if (!fs.rename(tmp, wp))
-      require(foldedWatermark(spark, base) >= hw,
-        s"watermark commit rename failed: $tmp -> $wp")
+    Publish.file(fsOf(spark, base), foldedWatermarkPath(base),
+      s"""{"watermark":$hw}\n""")
   }
 
   /** Finish a committed compaction swap: retire each folded delta's
@@ -1775,8 +1755,8 @@ object VectorOps {
     * is atomic, exactly one contender wins it, and the loser verifies
     * the winner's end state), never delete-then-rename, which would
     * open a window with no authoritative lists that a racing loser
-    * could be left holding; (2) deletes tolerate "already gone" — a
-    * failed delete is an error only if the path still exists. Hadoop
+    * could be left holding; (2) deletes tolerate "already gone"
+    * ([[Publish.remove]]). Hadoop
     * reports rename/delete failure by returning false, not throwing,
     * so every mutation checks its boolean against the converged state.
     * (Single WRITER is still the contract — what races here are
@@ -1787,28 +1767,25 @@ object VectorOps {
       spark: SparkSession, base: String, folded: Seq[String],
       purged: Boolean): Unit = {
     val fs = fsOf(spark, base)
-    def del(p: org.apache.hadoop.fs.Path, recursive: Boolean): Unit =
-      if (fs.exists(p) && !fs.delete(p, recursive))
-        require(!fs.exists(p), s"delete failed: $p")
     // the stream's folded-batch watermark lands FIRST: once the markers
     // below retire, a replayed micro-batch could only learn "already
     // folded" from this file — and heal re-runs this whole method, so a
     // crash at any point re-establishes it (monotone + atomic rename)
     advanceFoldedWatermark(spark, base, folded)
-    folded.foreach(s =>
-      del(new org.apache.hadoop.fs.Path(s"$base/$s/_SUCCESS"), false))
+    folded.foreach(s => Publish.remove(fs,
+      new org.apache.hadoop.fs.Path(s"$base/$s/_SUCCESS"), false))
     // tombstones retire FIRST, like the delta markers: once the merged
     // table (which already lacks the purged rows) is authoritative,
     // the tombstone list's job is done — dropping it before the swap
     // means no window serves the merged table with a stale mask (the
     // mask is a no-op on it anyway), and a crash here re-heals to the
     // same end state
-    if (purged)
-      del(new org.apache.hadoop.fs.Path(s"$base/$DeletesTable"), true)
+    if (purged) Publish.remove(fs,
+      new org.apache.hadoop.fs.Path(s"$base/$DeletesTable"), true)
     val lists = new org.apache.hadoop.fs.Path(s"$base/lists")
     val compacting = new org.apache.hadoop.fs.Path(s"$base/lists_compacting")
     val retired = new org.apache.hadoop.fs.Path(s"$base/lists_retired")
-    del(retired, true)
+    Publish.remove(fs, retired, true)
     if (fs.exists(lists) && fs.exists(compacting) &&
         !fs.rename(lists, retired))
       require(!fs.exists(lists) || !fs.exists(compacting),
@@ -1816,30 +1793,61 @@ object VectorOps {
     if (!fs.rename(compacting, lists))
       require(!fs.exists(compacting) && committed(spark, lists.toString),
         s"compaction swap rename failed: $compacting -> $lists")
-    del(retired, true)
-    folded.foreach(s => del(new org.apache.hadoop.fs.Path(s"$base/$s"), true))
-    del(manifestPath(base), false)
+    Publish.remove(fs, retired, true)
+    folded.foreach(s =>
+      Publish.remove(fs, new org.apache.hadoop.fs.Path(s"$base/$s"), true))
+    Publish.remove(fs, manifestPath(base), false)
   }
 
-  /** Per-index-location monitor serializing heal/complete within this
-    * driver: concurrent READERS (every search heals before trusting the
-    * layout) and the single maintenance writer all pass through here,
-    * so in-process interleavings of the swap protocol are serialized at
-    * statement granularity — the rename-based [[completeCompaction]]
-    * additionally converges benign races, but the lock removes the
-    * remaining TOCTOU window (a late healer observing pre-swap state
-    * and retiring the freshly swapped lists). CROSS-process readers
-    * racing a live writer's completion are outside this engine's
-    * contract (single maintenance process per index location, as
-    * [[indexBase]] documents) — a multi-process deployment puts the
-    * swap behind its table-format catalog (Iceberg-style snapshot
-    * commit), not bare directory renames.
+  /** This process's in-process locks for one index location.
+    *
+    * `heal` serializes heal/complete within this process: concurrent
+    * READERS (every search heals before trusting the layout) and the
+    * single maintenance writer all pass through it, so in-process
+    * interleavings of the swap protocol are serialized at statement
+    * granularity — the rename-based [[completeCompaction]] additionally
+    * converges benign races, but the lock removes the remaining TOCTOU
+    * window (a late healer observing pre-swap state and retiring the
+    * freshly swapped lists). CROSS-process readers racing a live
+    * writer's completion are outside this engine's contract (single
+    * maintenance process per index location, as [[indexBase]]
+    * documents) — a multi-process deployment puts the swap behind its
+    * table-format catalog (Iceberg-style snapshot commit), not bare
+    * directory renames.
+    *
+    * `compact` serializes whole compactions ([[ivfPqCompact]]). It is
+    * distinct from `heal`, so reader heals never wait on a merge. Lock
+    * order: the writer lease, then `compact`, then `heal`.
+    *
+    * `leases` counts this process's in-flight maintenance verbs
+    * ([[withWriterLease]]); its own monitor guards the lease file.
     */
-  private val healLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private[graft] final class IndexLocks {
+    val heal = new Object
+    val compact = new Object
+    val leases = new java.util.concurrent.atomic.AtomicInteger(0)
+  }
 
-  private def healLock(base: String): Object =
-    healLocks.computeIfAbsent(base, _ => new Object)
+  private val indexLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, IndexLocks]()
+
+  /** The locks of the index at `base`, keyed by its NORMALIZED location:
+    * two spellings of one index (trailing slash, `./` segments,
+    * relative vs absolute) must take the SAME locks or the
+    * serialization above is bypassed. `Path` squashes slashes and dot
+    * segments and the session filesystem's `makeQualified` pins scheme
+    * + working directory, so only genuinely distinct locations key
+    * distinct entries (symlinked aliases of one directory remain
+    * outside the contract, like cross-process writers). The map grows
+    * one entry per distinct index location for the JVM's life —
+    * unbounded in principle, irrelevant in practice.
+    */
+  private[graft] def locksOf(spark: SparkSession, base: String): IndexLocks = {
+    val p = new org.apache.hadoop.fs.Path(base)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    indexLocks.computeIfAbsent(
+      fs.makeQualified(p).toUri.toString, _ => new IndexLocks)
+  }
 
   /** Self-heal an interrupted compaction before reading or compacting.
     * Manifest present + merged table committed = the swap reached its
@@ -1854,30 +1862,31 @@ object VectorOps {
     * merged rows and double-count it in [[searchStored]]'s ADC sum.
     */
   private[graft] def healCompaction(spark: SparkSession, base: String): Unit =
-    healLock(base).synchronized { healCompactionLocked(spark, base) }
+    locksOf(spark, base).heal.synchronized {
+      healCompactionLocked(spark, base)
+    }
 
   private def healCompactionLocked(
       spark: SparkSession, base: String): Unit = {
     val fs = fsOf(spark, base)
     val mp = manifestPath(base)
-    if (!fs.exists(mp)) return
+    // an unreadable manifest reads as an empty body: no fold set, so it
+    // rolls back below
+    val body = try Publish.read(fs, mp)
+      catch { case _: java.io.IOException => Some("") }
+    if (body.isEmpty) return
+    val txt = body.get
+    // manifest bodies are written by this module only: a flat
+    // {"folded":["lists_delta_b1",...],"purged":bool}; manifests
+    // from before the delete verb carry no purged field = false
     val parsed: Option[(Seq[String], Boolean)] =
-      try {
-        val in = fs.open(mp)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        // manifest bodies are written by this module only: a flat
-        // {"folded":["lists_delta_b1",...],"purged":bool}; manifests
-        // from before the delete verb carry no purged field = false
-        """"folded"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt)
-          .map { m =>
-            (m.group(1).split(",").toSeq
-              .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-              .filter(_.nonEmpty),
-              """"purged"\s*:\s*true""".r.findFirstIn(txt).isDefined)
-          }
-      } catch { case _: java.io.IOException => None }
+      """"folded"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt)
+        .map { m =>
+          (m.group(1).split(",").toSeq
+            .map(_.trim.stripPrefix("\"").stripSuffix("\""))
+            .filter(_.nonEmpty),
+            """"purged"\s*:\s*true""".r.findFirstIn(txt).isDefined)
+        }
     val folded = parsed.map(_._1)
     parsed match {
       case Some((f, purged)) if committed(spark, s"$base/lists_compacting") =>
@@ -1886,18 +1895,16 @@ object VectorOps {
         // tolerant deletes, like completeCompaction's: a concurrent
         // healer rolling back the same torn manifest may have removed
         // the path first — "already gone" is the converged state
-        def del(p: org.apache.hadoop.fs.Path, recursive: Boolean): Unit =
-          if (fs.exists(p) && !fs.delete(p, recursive))
-            require(!fs.exists(p), s"delete failed: $p")
-        del(new org.apache.hadoop.fs.Path(s"$base/lists_compacting"), true)
+        Publish.remove(fs,
+          new org.apache.hadoop.fs.Path(s"$base/lists_compacting"), true)
         // a retired delta (marker already gone) only exists here if the
         // swap completed and cleanup crashed — its rows live in `lists`
         folded.getOrElse(Nil).foreach { s =>
           val p = new org.apache.hadoop.fs.Path(s"$base/$s")
           if (fs.exists(p) && !committed(spark, s"$base/$s"))
-            del(p, true)
+            Publish.remove(fs, p, true)
         }
-        del(mp, false)
+        Publish.remove(fs, mp, false)
     }
   }
 
@@ -1938,26 +1945,13 @@ object VectorOps {
     * ([[healCompaction]]'s note): one maintenance process per index
     * location, or a table-format catalog owns the swap.
     */
-  private val compactLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** The lock key is the NORMALIZED location, not the raw string: two
-    * spellings of one index (trailing slash, `./` segments, relative vs
-    * absolute) must take the SAME lock or the writer-vs-writer
-    * serialization above is bypassed. `Path` squashes slashes and dot
-    * segments and `makeQualified` pins scheme + working directory, so
-    * only genuinely distinct locations key distinct locks (symlinked
-    * aliases of one directory remain outside the contract, like
-    * cross-process writers). The map grows one entry per distinct
-    * index location for the JVM's life — unbounded in principle,
-    * irrelevant in practice (an Object per index a process maintains).
-    */
-  private def compactLock(base: String): Object = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val key = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .makeQualified(p).toUri.toString
-    compactLocks.computeIfAbsent(key, _ => new Object)
-  }
+  private[graft] def ivfPqCompact(
+      spark: SparkSession, base: String, deltas: Seq[String]): Unit =
+    withWriterLease(spark, base) {
+      locksOf(spark, base).compact.synchronized {
+        ivfPqCompactLocked(spark, base, deltas)
+      }
+    }
 
   private def leasePath(base: String) =
     new org.apache.hadoop.fs.Path(base, "_writer_lease.json")
@@ -1971,15 +1965,6 @@ object VectorOps {
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
     s"${rt.getName}/${rt.getStartTime}"
   }
-
-  // Outermost-verb refcount per normalized index location: the lease
-  // file exists exactly while ≥1 maintenance verb of this process is
-  // inside the index, so composed verbs (admit = add + threshold
-  // compact) hold ONE claim and concurrent same-process verbs (an add
-  // racing a compaction — legal, IvfPqCompactSpec's window case) don't
-  // drop the fence early.
-  private val leaseRefs = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]()
 
   /** CROSS-PROCESS writer fence for the persisted index — the
     * enforcement of docs/SCALE.md's single-maintenance-writer contract
@@ -2002,25 +1987,22 @@ object VectorOps {
       spark: SparkSession, base: String)(f: => T): T = {
     val p = leasePath(base)
     val fs = fsOf(spark, base)
-    val key = fs.makeQualified(new org.apache.hadoop.fs.Path(base))
-      .toUri.toString
     def holder(): Option[String] =
-      if (!fs.exists(p)) None
-      else try {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        """"writer"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      } catch { case _: java.io.IOException => None }
+      try Publish.read(fs, p).flatMap(
+        """"writer"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(_).map(_.group(1)))
+      catch { case _: java.io.IOException => None }
     def refuse(other: String): Nothing = throw new IllegalStateException(
       s"index at $base is being maintained by writer $other (this " +
         s"process is $writerId): a second maintenance writer would " +
         "corrupt the compaction swap. Stop the other process, or — if " +
         s"it is dead — delete ${leasePath(base)}; an interrupted swap " +
         "is finished automatically by the next heal.")
-    val refs = leaseRefs.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicInteger(0))
+    // outermost-verb refcount: the lease file exists exactly while ≥1
+    // maintenance verb of this process is inside the index, so composed
+    // verbs (admit = add + threshold compact) hold ONE claim and
+    // concurrent same-process verbs (an add racing a compaction —
+    // legal, IvfPqCompactSpec's window case) don't drop the fence early
+    val refs = locksOf(spark, base).leases
     refs.synchronized {
       if (refs.get() == 0) {
         holder() match {
@@ -2062,14 +2044,6 @@ object VectorOps {
       .select(col("vec_id"), col("sub"), col("code"),
         col("cell").cast("int").as("cell"))
 
-  private[graft] def ivfPqCompact(
-      spark: SparkSession, base: String, deltas: Seq[String]): Unit =
-    withWriterLease(spark, base) {
-      compactLock(base).synchronized {
-        ivfPqCompactLocked(spark, base, deltas)
-      }
-    }
-
   private def ivfPqCompactLocked(
       spark: SparkSession, base: String, deltas: Seq[String]): Unit = {
     healCompaction(spark, base)
@@ -2089,19 +2063,10 @@ object VectorOps {
       .repartition(col("cell")) // the compaction IS the small-file fix
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$base/lists_compacting")
-    val fs = fsOf(spark, base)
-    val mp = manifestPath(base)
-    val tmp = new org.apache.hadoop.fs.Path(base,
-      "_compaction_manifest.json.tmp")
-    val body =
+    Publish.file(fsOf(spark, base), manifestPath(base),
       s"""{"folded":[${present.map(graft.Json.quote).mkString(",")}],""" +
-        s""""purged":${dead.nonEmpty}}\n"""
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(mp))
-      require(fs.delete(mp, false), s"delete failed: $mp")
-    require(fs.rename(tmp, mp), s"manifest commit rename failed: $tmp -> $mp")
-    healLock(base).synchronized {
+        s""""purged":${dead.nonEmpty}}\n""")
+    locksOf(spark, base).heal.synchronized {
       completeCompaction(spark, base, present, dead.nonEmpty)
     }
   }
@@ -2369,21 +2334,19 @@ object VectorOps {
     val stamp = corpusStamp(spark, dir)
     val fs = fsOf(spark, base)
     val built = Seq("centroids", "codebooks", "lists")
-      .forall(t => committed(spark, s"$base/$t")) && {
-      val sp = stampPath(base)
+      .forall(t => committed(spark, s"$base/$t")) &&
       // an unreadable/corrupt stamp is a MISMATCH (rebuild), not a
       // crash — the stamp gates staleness, it must never gate liveness
-      try fs.exists(sp) && {
-        val in = fs.open(sp)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim == stamp
-        finally in.close()
-      } catch { case _: java.io.IOException => false }
-    }
-    if (!built) {
-      // a REBUILD (corpus swapped under the digest-keyed location)
-      // starts from nothing: stale tombstones would silently mask rows
-      // of the rebuilt index, stale deltas would be unioned into its
-      // searches, and a stale stream watermark would skip fresh batches
+      (try Publish.read(fs, stampPath(base)).exists(_.trim == stamp)
+       catch { case _: java.io.IOException => false })
+    // a REBUILD (corpus swapped under the digest-keyed location) is a
+    // maintenance write like any other, so it runs under the writer
+    // lease — a foreign writer is refused before anything is touched
+    if (!built) withWriterLease(spark, base) {
+      // it starts from nothing: stale tombstones would silently mask
+      // rows of the rebuilt index, stale deltas would be unioned into
+      // its searches, and a stale stream watermark would skip fresh
+      // batches
       val bp = new org.apache.hadoop.fs.Path(base)
       if (fs.exists(bp)) {
         val stale = fs.listStatus(bp).toSeq.map(_.getPath).filter { p =>
@@ -2392,13 +2355,11 @@ object VectorOps {
             n.startsWith("_folded_watermark") ||
             n.startsWith("_stream_identity")
         }
-        stale.foreach(p =>
-          require(fs.delete(p, true), s"delete failed: $p"))
+        stale.foreach(Publish.remove(fs, _, true))
       }
       val c = corpus
       ivfPqPersistFrames(spark, c, c, base)
-      val out = fs.create(stampPath(base), true)
-      try out.write((stamp + "\n").getBytes("UTF-8")) finally out.close()
+      Publish.file(fs, stampPath(base), stamp + "\n")
     }
     base
   }
@@ -2491,7 +2452,7 @@ object VectorOps {
     * the serving path: a `spark.sql` user points three views at the
     * persisted centroids/codebooks/lists parquet and composes the whole
     * probe → LUT → pruned-scan → ADC-sum pipeline with nothing but SQL
-    * and the injected `vector_dot` ([[graft.GraftExtensions]]). The
+    * and `vector_dot` (registered by [[graft.functions.Registry]]). The
     * text compiles to the SAME plan shape as the DataFrame form —
     * broadcast probe join against the hive-partitioned lists view, so
     * dynamic partition pruning fires at the scan exactly as in

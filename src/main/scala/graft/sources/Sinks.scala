@@ -50,9 +50,7 @@ object Sinks {
         incoming.unionByName(kept)
       } else incoming
     merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
+    Publish.table(fs, staging, target)
   }
 
   /** K4 — append sink partitioned by key, NDJSON files (reference

@@ -540,14 +540,14 @@ object Excel {
   /** Distributed MULTI-workbook export — K5 at 100× scale. One workbook
     * per non-empty partition, written TASK-side (`foreachPartition`, so
     * N partitions export as N parallel zip streams with zero driver
-    * involvement), each atomic via the same tmp+rename discipline as
-    * [[writeXlsxCapped]] — a task retry can never leave a torn shard,
-    * because the rename only happens after the zip closes cleanly.
+    * involvement), each published through [[Publish.file]], so a task
+    * retry can never leave a torn shard.
     *
     * Alongside each `part-NNNNN.xlsx` the task lands a one-line manifest
     * row under `dir/_manifest/` (`{"shard":N,"file":"…","n_rows":N}`),
-    * also tmp+renamed; the returned frame is the manifest read back, so
-    * a caller can audit shard completeness without opening workbooks.
+    * also through [[Publish.file]]; the returned frame is the manifest
+    * read back, so a caller can audit shard completeness without
+    * opening workbooks.
     * This is the exact inverse of [[readXlsx]]'s one-task-per-file
     * grain: `readXlsx(spark, s"$dir/part-*.xlsx")` round-trips the
     * frame, and at cluster scale thousands of shards fan out across
@@ -574,23 +574,9 @@ object Excel {
       if (it.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val fs = new Path(dir).getFileSystem(hadoopConf.value)
-        def atomically(dest: Path)(body: java.io.OutputStream => Unit): Unit = {
-          val tmp = new Path(dest.getParent, s".${dest.getName}.tmp")
-          val out = fs.create(tmp, true)
-          var ok = false
-          try { body(out); ok = true }
-          finally {
-            out.close()
-            if (ok) {
-              fs.delete(dest, false)
-              if (!fs.rename(tmp, dest))
-                throw new java.io.IOException(s"rename $tmp -> $dest failed")
-            } else fs.delete(tmp, false)
-          }
-        }
         val name = f"part-$pid%05d.xlsx"
         var n = 0L
-        atomically(new Path(dir, name)) { out =>
+        Publish.file(fs, new Path(dir, name)) { out =>
           Xlsx.write(header, it.map { r =>
             n += 1
             require(n <= cap,
@@ -599,11 +585,8 @@ object Excel {
             r.toSeq
           }, out, sheetName)
         }
-        atomically(new Path(s"$dir/_manifest", f"part-$pid%05d.json")) { out =>
-          val w = new java.io.OutputStreamWriter(out, "UTF-8")
-          w.write(s"""{"shard":$pid,"file":"$name","n_rows":$n}""" + "\n")
-          w.flush()
-        }
+        Publish.file(fs, new Path(s"$dir/_manifest", f"part-$pid%05d.json"),
+          s"""{"shard":$pid,"file":"$name","n_rows":$n}""" + "\n")
       }
     }
     spark.read
@@ -625,23 +608,16 @@ object Excel {
     * without constructing 2^20 rows). Enforced DURING the row stream —
     * no extra counting job; the write aborts on the first over-cap row.
     *
-    * The write is ATOMIC at the destination: bytes stream to a
-    * temporary sibling (`.path.tmp`) that renames over `path` only
-    * after the zip closes cleanly — an over-cap abort (or any mid-zip
-    * failure) must never replace an existing export with a corrupt
-    * partial file, because the destination is a user-facing artifact a
-    * downstream may be watching by mtime (the S3 newest-file pattern).
+    * The write goes through [[Publish.file]]: an over-cap abort (or
+    * any mid-zip failure) leaves an existing export untouched.
     */
   private[graft] def writeXlsxCapped(df: DataFrame, path: String,
       sheetName: String, cap: Long): Unit = {
     import scala.jdk.CollectionConverters._
     val p = new Path(path)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val fs = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    val out = fs.create(tmp, true)
     var n = 0L
-    var ok = false
-    try {
+    Publish.file(fs, p) { out =>
       Xlsx.write(df.columns.toSeq,
         df.toLocalIterator().asScala.map { r =>
           n += 1
@@ -651,14 +627,6 @@ object Excel {
               "workbooks for bulk data")
           r.toSeq
         }, out, sheetName)
-      ok = true
-    } finally {
-      out.close()
-      if (ok) {
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"rename $tmp -> $p failed")
-      } else fs.delete(tmp, false)
     }
   }
 }

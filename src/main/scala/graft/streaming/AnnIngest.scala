@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.operators.VectorOps
+import graft.sources.Publish
 
 /** Streaming maintenance of the persisted IVF-PQ index — the scheduled
   * 100-TB ingest job expressed as one Structured Streaming program.
@@ -119,16 +120,17 @@ object AnnIngest {
   private[graft] def streamIdentity(
       s: SparkSession, checkpointDir: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    } catch { case _: java.io.IOException => None }
+    idIn(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
   }
+
+  /** The `"id"` of the small JSON file at `p`; None when it is absent
+    * or unreadable.
+    */
+  private def idIn(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try Publish.read(fs, p).flatMap(
+      """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(_).map(_.group(1)))
+    catch { case _: java.io.IOException => None }
 
   /** Closes the WRONG-CHECKPOINT data-loss window of the folded-batch
     * watermark: the watermark skip keys on raw micro-batch ids, which
@@ -146,15 +148,7 @@ object AnnIngest {
       s: SparkSession, base: String, id: String, watermark: Long): Unit = {
     val p = identityPath(base)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stamped: Option[String] =
-      if (!fs.exists(p)) None
-      else try {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      } catch { case _: java.io.IOException => None }
+    val stamped = idIn(fs, p)
     if (stamped.contains(id)) return
     // Takeover is legal ONLY while nothing has been folded. A missing
     // stamp does NOT soften that: a pre-stamp legacy index, a manually
@@ -174,16 +168,9 @@ object AnnIngest {
         "dropped. Re-point the stream at the original checkpoint, or " +
         "wipe the index (including _folded_watermark) to re-ingest " +
         "from scratch.")
-    val tmp = new org.apache.hadoop.fs.Path(base, "_stream_identity.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"id":"$id"}\n""".getBytes("UTF-8"))
-    finally out.close()
-    // Atomic overwrite via FileContext: no delete-then-rename crash
-    // window in which the stamp is absent (the state the require above
-    // now refuses to adopt against a positive watermark).
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // never absent while replaced: an absent stamp is the state the
+    // require above refuses to adopt against a positive watermark
+    Publish.file(fs, p, s"""{"id":"$id"}\n""")
   }
 
   /** Driver-oracle row q_ann_ingest_stream — the continuous-ingest

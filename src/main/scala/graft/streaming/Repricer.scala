@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.functions.F
+import graft.sources.Publish
 
 /** T5 — the periodic repricing engine (reference PRICEBOT_SPEC_V2.md:
   * 92-100 + run/route.ts:25-41): each observed batch of competitor
@@ -69,15 +70,17 @@ object Repricer {
     * log does not exist yet (first ever batch). Re-read per trigger: the
     * log is action-sized (decisions, not offers), so this is a small
     * scan — at warehouse scale the same lookup reads the K4-partitioned
-    * log's latest partition or a state store.
+    * log's latest partition or a state store. The existence check is
+    * one metadata call, so a first batch never resolves a missing path.
     */
-  private def lastActionTs(spark: SparkSession, actionsDir: String): Option[DataFrame] =
-    try {
-      Some(spark.read.schema(StructType(Seq(
-          StructField("sku", LongType),
-          StructField("action_ts", LongType))))
-        .json(actionsDir))
-    } catch { case _: AnalysisException => None }
+  private def lastActionTs(spark: SparkSession, actionsDir: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(actionsDir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(spark.read.schema(StructType(Seq(
+        StructField("sku", LongType),
+        StructField("action_ts", LongType))))
+      .json(actionsDir))
+  }
 
   /** The oracle-checked form of the repricer (q_repricer_actions): land
     * lineitem-derived offers as NDJSON, run the streaming repricer to
@@ -185,14 +188,8 @@ object Repricer {
       offers.filter(pmod(col("l_orderkey"), lit(3)) === k)
         .drop("l_orderkey")
         .coalesce(LandingShards).write.json(staging)
-      fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .foreach { part =>
-          val dest = new org.apache.hadoop.fs.Path(landing, s"b${k}_${part.getName}")
-          if (!fs.rename(part, dest))
-            throw new java.io.IOException(s"rename $part -> $dest failed")
-        }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      Publish.parts(fs, new org.apache.hadoop.fs.Path(staging),
+        new org.apache.hadoop.fs.Path(landing), s"b$k")
       StreamOracle.drain(start(spark, landing, settings, Seq("7"), actions, ckpt,
         clock, maxFilesPerTrigger = None), s"repricer batch $k")
     }

@@ -95,13 +95,23 @@ object StateStores {
       case LandedBytes(dir) => Some(statePartitionsFor(landedBytes(spark, dir)))
       case CpuBound => Some(cpuBoundStateParts(spark))
     }
-    val keys = RocksDbConf ++ parts.map(n => ShufflePartitions -> n.toString)
+    withKeys(spark,
+        RocksDbConf ++ parts.map(n => ShufflePartitions -> n.toString)) {
+      writer
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
+  }
+
+  /** Run `f` with `keys` set on the session, then put every key back to
+    * its prior value (or unset it again).
+    */
+  private[graft] def withKeys[T](spark: SparkSession,
+      keys: Seq[(String, String)])(f: => T): T = {
     val before = spark.conf.getAll
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try writer
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    try f
     finally keys.foreach { case (k, _) =>
       before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }

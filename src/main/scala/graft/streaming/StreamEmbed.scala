@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.VectorOps
+import graft.sources.Publish
 
 /** Streaming embedding near-duplicate admission — the continuous-ingest
   * face of the batch multi-probe LSH pipeline
@@ -181,12 +182,8 @@ object StreamEmbed {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft_knobs.json")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val cur = s"""{"n_planes":$nPlanes,"max_residents":$maxResidents}"""
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (stored != cur)
+    Publish.read(fs, p).map(_.trim) match {
+      case Some(stored) if stored != cur =>
         throw new IllegalStateException(
           s"StreamEmbed checkpoint at $checkpointDir was built with " +
             s"knobs $stored but this start asked for $cur. Restoring " +
@@ -197,9 +194,8 @@ object StreamEmbed {
             "checkpoint dir and the emitted pairs, restart with the new " +
             "knobs, and re-admit the landing history (docs/SCALE.md, " +
             "\"Resizing the embedding admission stream\").")
-    } else {
-      val out = fs.create(p, true) // creates parent dirs on any scheme
-      try out.write((cur + "\n").getBytes("UTF-8")) finally out.close()
+      case Some(_) => ()
+      case None => Publish.file(fs, p, cur + "\n")
     }
   }
 

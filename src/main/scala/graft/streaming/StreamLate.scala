@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Out, Scratch, Tables}
 import graft.operators.TextOps
+import graft.sources.Publish
 
 /** Late-data driver-oracle rows for the streaming suite.
   *
@@ -121,8 +122,7 @@ object StreamLate {
           "must be non-empty and single-file for the one-trigger-per-" +
           "batch mtime contract")
       val dst = new Path(lp, f"batch_$i%02d.json")
-      if (!fs.rename(parts.head.getPath, dst))
-        throw new java.io.IOException(s"rename ${parts.head.getPath} -> $dst failed")
+      Publish.move(fs, parts.head.getPath, dst)
       fs.setTimes(dst, 1700000000000L + i * 60000L, -1L)
     }
     fs.delete(stage, true)
@@ -301,13 +301,7 @@ object StreamLate {
           s"[$mn,$mx] is empty — skewed distribution defeats the " +
           "newest-first arrival pattern; re-bucket by rank for this corpus")
       bucket.repartition(Repricer.LandingShards).write.json(staging.toString)
-      fs.listStatus(staging).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).foreach { part =>
-          val dst = new Path(landing, s"b${k}_${part.getName}")
-          if (!fs.rename(part, dst))
-            throw new java.io.IOException(s"rename $part -> $dst failed")
-        }
-      fs.delete(staging, true)
+      Publish.parts(fs, staging, landing, s"b$k")
       StreamOracle.drain(
         StreamCdc.start(spark, s"$tmp/landing", s"$tmp/out", s"$tmp/ckpt",
           maxFilesPerTrigger = None),

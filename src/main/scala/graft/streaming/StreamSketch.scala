@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.Sketches
-import graft.sources.ParquetMeta
+import graft.sources.{ParquetMeta, Publish}
 
 /** Streaming count-min sketch maintenance — the merge law in motion:
   * each micro-batch builds its own Depth×Width cell frame
@@ -70,9 +70,7 @@ object StreamSketch {
     // next trigger's read-merge opens one footer instead of a part
     // file per shuffle partition
     merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
+    Publish.table(fs, staging, target)
 
     // marker lands AFTER the swap, preserving the two-phase contract:
     // a crash in between degrades to a re-merge on replay, never a skip

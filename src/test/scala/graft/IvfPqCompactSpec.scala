@@ -370,4 +370,75 @@ class IvfPqCompactSpec extends AnyFunSuite {
     val lists = spark.read.parquet(s"$base/lists").select("vec_id", "sub")
     assert(lists.count() === corpus.count() * VectorOps.PqSubspaces)
   }
+
+  test("one lock entry per index location: every spelling of one base shares heal, compact and lease") {
+    val base = VectorOps.indexBase(dir, "locks")
+    val locks = VectorOps.locksOf(spark, base)
+    for (alias <- Seq(base + "/", base + "/."))
+      assert(VectorOps.locksOf(spark, alias) eq locks,
+        s"$alias keys a second lock entry")
+    // a heal through another spelling waits on the heal monitor held
+    // through this one
+    val healed = new java.util.concurrent.CountDownLatch(1)
+    val t = new Thread(() => {
+      VectorOps.healCompaction(spark, base + "/")
+      healed.countDown()
+    })
+    locks.heal.synchronized {
+      t.start()
+      assert(!healed.await(1, java.util.concurrent.TimeUnit.SECONDS),
+        "a heal through base/ ran while base's heal monitor was held")
+    }
+    assert(healed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    t.join()
+  }
+
+  test("a REBUILD takes the writer lease: a foreign lease + stale stamp refuses before touching the index") {
+    val tag = "rebuildlease"
+    val base = VectorOps.indexBase(dir, tag)
+    rm(new java.io.File(base))
+    val corpus = VectorOps.embBase(spark, dir)
+    VectorOps.ensureIndex(spark, dir, tag, corpus)
+    VectorOps.ivfPqAdd(spark, dir, base) // a delta the rebuild would sweep
+    val lease = new java.io.File(s"$base/_writer_lease.json")
+    java.nio.file.Files.writeString(lease.toPath,
+      """{"writer":"9999@elsewhere/1"}""" + "\n")
+    // the skip path takes no lease: serving goes on beside a live writer
+    VectorOps.LloydMeter.reset()
+    assert(VectorOps.ensureIndex(spark, dir, tag, corpus) === base)
+    assert(VectorOps.LloydMeter.iterations.get() === 0L)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(base, "_corpus_stamp.json"),
+      """{"path":"swapped","mtime":0,"len":0}""")
+    def snapshot(): Map[String, (Long, Long)] = {
+      val root = java.nio.file.Paths.get(base)
+      val files = java.nio.file.Files.walk(root).iterator()
+      var m = Map.empty[String, (Long, Long)]
+      while (files.hasNext) {
+        val f = files.next().toFile
+        m += root.relativize(f.toPath).toString -> ((f.length, f.lastModified))
+      }
+      m
+    }
+    val before = snapshot()
+    val e = intercept[IllegalStateException](
+      VectorOps.ensureIndex(spark, dir, tag, corpus))
+    assert(e.getMessage.contains("9999@elsewhere/1") &&
+        e.getMessage.contains(VectorOps.writerId),
+      s"refusal names neither holder nor self: ${e.getMessage}")
+    val after = snapshot()
+    val touched = (before.keySet ++ after.keySet)
+      .filter(k => before.get(k) != after.get(k))
+    assert(touched.isEmpty, "a refused rebuild touched the index: " +
+      touched.toSeq.sorted.mkString(", "))
+    // the holder is confirmed dead: the rebuild runs and hands the
+    // lease back
+    assert(lease.delete())
+    VectorOps.LloydMeter.reset()
+    VectorOps.ensureIndex(spark, dir, tag, corpus)
+    assert(VectorOps.LloydMeter.iterations.get() > 0L)
+    assert(!lease.exists, "the rebuild left the writer lease behind")
+    assert(!new java.io.File(s"$base/lists_delta").exists,
+      "the rebuild kept a stale delta")
+  }
 }

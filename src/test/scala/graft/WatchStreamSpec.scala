@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
-import graft.streaming.WatchStream
+import graft.streaming.{StateStores, WatchStream}
 
 /** Streaming slice (T1–T4): the VERDICT's batch-equivalence bar — the
   * stateful stream over replayed micro-batches must hash-equal the batch
@@ -48,20 +48,30 @@ class WatchStreamSpec extends AnyFunSuite {
     // batch 1: three undercuts -> sliding_hits reaches 3 (bot)
     capture(0, Seq((1L, 99L, 10.0), (2L, 99L, 10.0), (3L, 99L, 10.0)))
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Boolean)]()
-    val q = WatchStream
-      .detectBots(WatchStream.flatten(WatchStream.readLanding(spark, landing)),
-        stateTtl = Some("3 seconds"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[WatchStream.BotOutput], _: Long) =>
-        batch.collect().foreach(o => out.synchronized {
-          out += ((o.event_id, o.sliding_hits, o.is_bot)) })
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
-      .start()
+    // a ProcessingTime stream cannot start through StateStores.start
+    // (AvailableNow only), so it sets the same state-store keys around
+    // its own start(): the TTL-expiry path runs on the RocksDB provider
+    // every production stream uses, and the shared session gets its
+    // own keys back as soon as start() returns
+    val q = StateStores.withKeys(spark, StateStores.RocksDbConf) {
+      WatchStream
+        .detectBots(WatchStream.flatten(WatchStream.readLanding(spark, landing)),
+          stateTtl = Some("3 seconds"))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[WatchStream.BotOutput], _: Long) =>
+          batch.collect().foreach(o => out.synchronized {
+            out += ((o.event_id, o.sliding_hits, o.is_bot)) })
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime("500 milliseconds"))
+        .start()
+    }
     try {
       eventually(20000L) { out.synchronized(out.size) == 3 }
+      assert(DrainIsolationSpec.offsetsConf(ckpt)
+        .get("spark.sql.streaming.stateStore.providerClass") ===
+        Some(StateStores.RocksDbProvider))
       assert(out.synchronized(out.toSet) ===
         Set((1L, 1L, false), (2L, 2L, false), (3L, 3L, true)))
       Thread.sleep(5000L) // idle past the 3s TTL -> state removed
