@@ -207,11 +207,12 @@ object QueryCatalog {
   // SAME chain trains the full-dimension quantizer (src=embeddings,
   // sfx="") and each PQ subspace codebook (src=es<m>, sfx=_s<m>).
   // Training CTEs (a0/a1) read the TrainCap-bounded md5 sample `tr` —
-  // the VectorOps.lloydOn sampling rule verbatim — while the final
-  // assignment a2 (the index encode) sweeps the full source.
+  // the VectorOps.trainSample rule verbatim (a subspace's `tr` holds
+  // the sub-vectors of the same vectors) — while the final assignment
+  // a2 (the index encode) sweeps the full source.
   // `encodeSrc` decouples the encoded relation from the training one
-  // (VectorOps.lloydOnSplit: the add-after-train oracle trains on the
-  // base subset but encodes the whole corpus); null = same as src.
+  // (VectorOps.lloyd's `encode`: the add-after-train oracle trains on
+  // the base subset but encodes the whole corpus); null = same as src.
   private def lloydChain(src: String, sfx: String, seed: String = "label",
       encodeSrc: String = null): String = {
     val mean = rnd("CAST(sum(CAST(v::DOUBLE AS DECIMAL(25,10))) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)

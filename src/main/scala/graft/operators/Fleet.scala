@@ -16,13 +16,14 @@ object Fleet {
 
   /** S1/S2/F1/U1 — glob scan with file-name predicate + union-all: every
     * `*orders*.csv` shard in one read (reference etl_sales.py:36-43 glob
-    * + pd.concat). The glob IS the file-name predicate — Spark lists and
-    * unions shards in one job, and at 100 TB the read parallelizes per
-    * 128 MB split with no driver involvement.
+    * + pd.concat). The glob IS the file-name predicate — the driver
+    * lists the matching shards ([[Ingest.globPaths]], file metadata
+    * only), Spark unions them in one job, and at 100 TB the read
+    * parallelizes per 128 MB split.
     */
   def globOrders(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Ingest.readSemicolonCsv(spark,
-      s"${Ingestion.FixturesDir}/shards/*orders*.csv")
+    val raw = Ingest.readSemicolonCsv(spark, Ingest.globPaths(spark,
+      s"${Ingestion.FixturesDir}/shards/*orders*.csv"): _*)
     val r = raw
       .withColumn("source_file",
         regexp_extract(input_file_name(), "([^/]+)\\.csv", 1))

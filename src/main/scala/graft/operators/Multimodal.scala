@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.{Out, Tables}
 import graft.functions.F
+import graft.sources.Ingest
 
 /** Multimodal columns for a training-data pipeline: media as opaque
   * `binary` columns with typed metadata, plus decode / thumbnail /
@@ -340,7 +341,8 @@ object Multimodal {
     */
   def mediaDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = spark.read.format("binaryFile").load(MediaFixturesGlob)
+    val m = spark.read.format("binaryFile")
+      .load(Ingest.globPaths(spark, MediaFixturesGlob): _*)
       .select(
         regexp_extract(col("path"), "img_(\\d+)\\.png", 1).cast(LongType)
           .as("media_id"),
@@ -403,7 +405,8 @@ object Multimodal {
     */
   def mediaAudio(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = spark.read.format("binaryFile").load(AudioFixturesGlob)
+    val m = spark.read.format("binaryFile")
+      .load(Ingest.globPaths(spark, AudioFixturesGlob): _*)
       .select(
         regexp_extract(col("path"), "audio_(\\d+)\\.wav", 1).cast(LongType)
           .as("media_id"),
@@ -469,7 +472,8 @@ object Multimodal {
     */
   def mediaVideo(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = spark.read.format("binaryFile").load(VideoFixturesGlob)
+    val m = spark.read.format("binaryFile")
+      .load(Ingest.globPaths(spark, VideoFixturesGlob): _*)
       .select(
         regexp_extract(col("path"), "video_(\\d+)\\.gif", 1).cast(LongType)
           .as("media_id"),

@@ -94,8 +94,7 @@ object VectorOps {
     * anyway.
     */
   private[graft] def embDistributed(spark: SparkSession, dir: String) =
-    emb(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+    spread(spark, emb(spark, dir))
 
   /** Left-to-right dot product in doubles — the native codegen
     * [[graft.functions.VectorDot]] expression (bit-identical to a
@@ -217,6 +216,179 @@ object VectorOps {
         col("n_exact").cast("double"), 6))
     }
   }
+
+  // ---- Quantizer kernel -----------------------------------------------
+  // Both trained quantizers — the coarse IVF cells and the
+  // [[PqSubspaces]] PQ codebooks — are built from these steps and one
+  // Lloyd loop, the chain the oracle unrolls (QueryCatalog.lloydChain).
+  // Each step is keyed by an optional subspace column: no key for the
+  // coarse quantizer, `sub` for PQ. The assign tie-break is fixed here:
+  // highest rounded similarity, ties to the smaller centroid id, per
+  // (vec_id, key…). KernelTieBreakSpec pins it.
+
+  /** Lloyd iterations of every trained quantizer (fixed, so the oracle
+    * can unroll them).
+    */
+  val KmeansIters = 2
+
+  /** Plan-build-time count of Lloyd steps composed since the last
+    * reset — the instrument behind IvfPqAddSpec's zero-retrain law: the
+    * incremental index ADD path must construct NO k-means step (its
+    * quantizers come from the stored artifacts), and the meter proves
+    * it at the level the code can't fake: every Lloyd step in the
+    * engine is composed inside [[lloyd]], which ticks once per step
+    * (QuantizerKernelGuardSpec keeps it the only tick).
+    */
+  private[graft] object LloydMeter {
+    val iterations = new java.util.concurrent.atomic.AtomicLong(0L)
+    def reset(): Unit = iterations.set(0L)
+  }
+
+  /** Quantizer TRAINING-SAMPLE cap — the faiss discipline: both
+    * quantizers train on one bounded, deterministic sample of the
+    * corpus ([[trainSample]]: the smallest [[TrainCap]] md5(vec_id)
+    * values — a distributed top-N, no corpus shuffle), and only the
+    * final assign/encode pass touches every vector. Untrained, Lloyd
+    * cost grows linearly with the corpus per iteration — measured
+    * ~5.9× on 10× vectors for the PQ chain — which is exactly the
+    * "can't Lloyd 100 TB" wall; sampled, training is O(cap) at any
+    * corpus size and the scale cost is the single inherent encode
+    * pass. 2048 ≥ the 39·k points-per-centroid faiss floor for every
+    * codebook here, and ≥ the whole corpus at the oracle-gated SFs, so
+    * small-SF results are unchanged while the asymptote is fixed.
+    */
+  val TrainCap = 2048
+
+  /** The training sample of one build: the [[TrainCap]] vectors
+    * (vec_id, embedding, label) of `e` with the smallest md5(vec_id),
+    * checkpointed once. Both quantizers read it — the PQ training rows
+    * are its sub-vectors ([[subsOf]]), the oracle's rule.
+    */
+  private def trainSample(e: DataFrame): DataFrame =
+    Out.eager(e.select(col("vec_id"), col("embedding"), col("label"))
+      .orderBy(md5(col("vec_id").cast("string"))).limit(TrainCap))
+
+  /** The centroid step: decimal-exact per-dimension means of an
+    * assignment (keys…, cluster, embedding), as (keys…, cluster,
+    * centroid) — one explode/groupBy, combines map-side.
+    */
+  private def centroidStep(assigned: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col) :+ col("cluster")
+    assigned.select(k :+ posexplode(col("embedding")).as(Seq("dim", "v")): _*)
+      .groupBy(k :+ col("dim"): _*)
+      .agg(F.avgFromSums(sum(col("v").cast("decimal(25,10)")), count(lit(1))).as("c"))
+      .groupBy(k: _*)
+      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+        x => x.getField("c")).as("centroid"))
+  }
+
+  /** The assign step: every (vec_id, keys…) row of `rows` to its
+    * highest-similarity centroid of `cents` (keys…, cluster, centroid),
+    * ties to the smaller cluster id, via a broadcast of the tiny
+    * centroid table — the rows never shuffle for the join. Output
+    * (vec_id, keys…, carry…, cluster[, sim]): `carry` names columns of
+    * `rows` constant per vec_id, plus "sim" for the winning similarity.
+    *
+    * The argmax is a hash aggregate over max(struct(sim, -cluster)) —
+    * lexicographic struct comparison gives highest sim, ties to the
+    * smaller id, exactly the rank-1 window it replaces — so the
+    * k-fanned candidate rows partial-aggregate map-side instead of
+    * feeding a per-group sort (guide §2.3/§2.4: aggregate before the
+    * exchange, no corpus-sized Sort).
+    */
+  private[graft] def assign(rows: DataFrame, cents: DataFrame,
+      keys: Seq[String] = Nil, carry: Seq[String] = Nil): DataFrame = {
+    val joined =
+      if (keys.isEmpty) rows.crossJoin(broadcast(cents))
+      else rows.join(broadcast(cents), keys)
+    val (sim, kept) = carry.partition(_ == "sim")
+    val best = max(struct(
+      F.roundHalfUp(dot(col("embedding"), col("centroid")), 6).as("sim"),
+      (-col("cluster")).as("negc"), col("cluster"))).as("best")
+    joined.groupBy(col("vec_id") +: keys.map(col): _*)
+      .agg(best, kept.map(c => first(col(c)).as(c)): _*)
+      .select((col("vec_id") +: (keys ++ kept).map(col)) ++
+        (col("best").getField("cluster").as("cluster") +:
+          sim.map(s => col("best").getField(s).as(s))): _*)
+  }
+
+  /** [[KmeansIters]] Lloyd steps (centroid step, then assign), keyed
+    * by `keys`, from the `seed` assignment of `sample`. Training reads
+    * only `sample`; the final centroids are checkpointed (the tiny
+    * table is both written or probed AND broadcast into the
+    * corpus-sized encode, and lazily each consumer would re-run the
+    * whole chain) and the one pass over `encode` assigns it against
+    * them, carrying `carry`. Returns (centroids, encode assignment),
+    * Voronoi-consistent over all of `encode`.
+    */
+  private def lloyd(sample: DataFrame, encode: DataFrame, keys: Seq[String],
+      seed: Column, carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    def step(assigned: DataFrame): DataFrame = {
+      LloydMeter.iterations.incrementAndGet()
+      centroidStep(assigned, keys)
+    }
+    val cents = Out.eager((2 to KmeansIters).foldLeft(
+      step(sample.withColumn("cluster", seed))) { (c, _) =>
+      step(assign(sample, c, keys, Seq("embedding")))
+    })
+    (cents, assign(encode, cents, keys, carry))
+  }
+
+  /** The coarse quantizer over a training sample: label-seeded cells
+    * (cluster, centroid) and the (vec_id, embedding, label, cluster,
+    * sim) assignment of `encode`.
+    */
+  private def coarse(sample: DataFrame, encode: DataFrame): (DataFrame, DataFrame) =
+    lloyd(sample, encode, Nil, col("label"), Seq("embedding", "label", "sim"))
+
+  /** The PQ quantizer over the same kind of sample: all [[PqSubspaces]]
+    * codebooks train JOINTLY as rows keyed by `sub` (one centroid
+    * aggregate + one broadcast assign per step, not one chain per
+    * subspace; the oracle unrolls per subspace, arithmetic-identical),
+    * seeded by vec_id mod [[PqCodebooks]]. Returns the codebooks
+    * (sub, code, centroid) and the codes (vec_id, sub, code) of
+    * `encode`, whose sub-vectors are read once, lazily.
+    */
+  private def pq(spark: SparkSession, sample: DataFrame,
+      encode: DataFrame): (DataFrame, DataFrame) = {
+    val (cents, codes) = lloyd(subsOf(sample), subsOf(spread(spark, encode)),
+      Seq("sub"), col("vec_id") % PqCodebooks)
+    (cents.select(col("sub"), col("cluster").as("code"), col("centroid")),
+      codes.select(col("vec_id"), col("sub"), col("cluster").as("code")))
+  }
+
+  /** Both IVF-PQ quantizers over ONE [[trainSample]] of `train`, each
+    * encoding `encode` — the faiss add-after-train shape when the two
+    * differ: ((coarse centroids, cell assignment), (codebooks, codes)).
+    */
+  private def ivfPqIndex(spark: SparkSession, train: DataFrame,
+      encode: DataFrame): ((DataFrame, DataFrame), (DataFrame, DataFrame)) = {
+    val sample = trainSample(train)
+    (coarse(sample, spread(spark, encode)
+        .select(col("vec_id"), col("embedding"), col("label"))),
+      pq(spark, sample, encode))
+  }
+
+  /** Sub-vector rows (vec_id, sub, embedding) of any (vec_id,
+    * embedding, …) frame: [[PqSubspaces]] slices of [[PqSubDim]] dims.
+    * The training rows split the checkpointed sample as it lies; the
+    * encode splits a [[spread]] frame, so its partition count is the
+    * encode parallelism.
+    */
+  private def subsOf(e: DataFrame): DataFrame = {
+    val chunks = transform(sequence(lit(0), lit(PqSubspaces - 1)),
+      m => slice(col("embedding"), m * PqSubDim + 1, lit(PqSubDim)))
+    e.select(col("vec_id"), posexplode(chunks).as(Seq("sub", "embedding")))
+  }
+
+  /** `e` hash-spread by vec_id over the cores — the [[embDistributed]]
+    * shuffle for any frame. The encode pass is a map-side broadcast
+    * join over it, so its partition count IS the encode parallelism (a
+    * single-split scan serialized the corpus × codebook argmax: 5.8 s
+    * -> 3.0 s wall on q_ann_pq at sf1).
+    */
+  private def spread(spark: SparkSession, e: DataFrame): DataFrame =
+    e.repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
 
   // ---- ANN search ladder ---------------------------------------------
 
@@ -498,38 +670,6 @@ object VectorOps {
     Out.sorted(r)(col("q_id"), col("rank"))
   }
 
-  /** Lloyd iterations of the trained coarse quantizer (fixed, so the
-    * oracle can unroll them).
-    */
-  val KmeansIters = 2
-
-  /** Plan-build-time count of Lloyd iterations composed since the last
-    * reset — the instrument behind IvfPqAddSpec's zero-retrain law: the
-    * incremental index ADD path must construct NO k-means step (its
-    * quantizers come from the stored artifacts), and the meter proves
-    * it at the level the code can't fake (every Lloyd step in the
-    * engine is composed inside [[lloydOnSplit]] / [[pqIndexSplit]]).
-    */
-  private[graft] object LloydMeter {
-    val iterations = new java.util.concurrent.atomic.AtomicLong(0L)
-    def reset(): Unit = iterations.set(0L)
-  }
-
-  /** Quantizer TRAINING-SAMPLE cap — the faiss discipline: codebooks
-    * and coarse centroids train on a bounded, deterministic sample of
-    * the corpus (smallest [[TrainCap]] md5(vec_id) values — a
-    * distributed top-N, no corpus shuffle), and only the final
-    * assignment/encoding pass touches every vector. Untrained, Lloyd
-    * cost grows linearly with the corpus per iteration — measured
-    * ~5.9× on 10× vectors for the PQ chain — which is exactly the
-    * "can't Lloyd 100 TB" wall; sampled, training is O(cap) at any
-    * corpus size and the scale cost is the single inherent encode
-    * pass. 2048 ≥ the 39·k points-per-centroid faiss floor for every
-    * codebook here, and ≥ the whole corpus at the oracle-gated SFs, so
-    * small-SF results are unchanged while the asymptote is fixed.
-    */
-  val TrainCap = 2048
-
   /** Trained IVF coarse quantizer — [[KmeansIters]] Lloyd iterations
     * refining the label seed: assign every vector to its
     * highest-similarity centroid (ties to the smaller cluster id),
@@ -558,98 +698,17 @@ object VectorOps {
     Out.sorted(r)(col("cluster"))
   }
 
-  /** Decimal-exact per-dimension mean centroids of a (cluster, embedding)
-    * assignment — one explode/groupBy, combines map-side.
-    */
-  private def centroidsOf(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("cluster", "dim")
-      .agg(F.avgFromSums(sum(col("v").cast("decimal(25,10)")), count(lit(1))).as("c"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-        x => x.getField("c")).as("centroid"))
-
-  /** One Lloyd assignment step: every vector to its highest-similarity
-    * centroid (ties to the smaller cluster id), via a broadcast of the
-    * tiny k×dim centroid table — the corpus never shuffles.
-    *
-    * The argmax is a hash aggregate over max(struct(sim, -cluster)) —
-    * lexicographic struct comparison gives highest sim, ties to the
-    * smaller cluster id, exactly the rank-1 window it replaces — so the
-    * k-fanned candidate rows partial-aggregate map-side instead of
-    * feeding a per-group sort (guide §2.3/§2.4: aggregate before the
-    * exchange, no corpus-sized Sort). embedding/label are constant per
-    * vec_id, so first() over the group is deterministic.
-    */
-  private def assignTo(e: DataFrame, centroids: DataFrame): DataFrame =
-    e.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("embedding"), col("label"), col("cluster"),
-        F.roundHalfUp(dot(col("embedding"), col("centroid")), 6).as("sim"))
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        first(col("label")).as("label"),
-        max(struct(col("sim"), (-col("cluster")).as("negc"),
-          col("cluster"))).as("best"))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        col("best").getField("cluster").as("cluster"),
-        col("best").getField("sim").as("sim"))
-
-  /** The trained IVF index after [[KmeansIters]] Lloyd iterations:
-    * (final centroids, final assignment). The returned centroids are
-    * exactly the ones the final assignment was computed against, so the
-    * cells are Voronoi-consistent — what [[annIvfTrained]] probes.
+  /** The trained IVF index: the [[coarse]] quantizer over the corpus's
+    * [[trainSample]], as (final centroids, final assignment). The
+    * returned centroids are exactly the ones the final assignment was
+    * computed against, so the cells are Voronoi-consistent — what
+    * [[annIvfTrained]] probes.
     */
   private[graft] def trainedIndex(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    lloydOn(
-      embDistributed(spark, dir)
-        .select(col("vec_id"), col("embedding"), col("label")),
-      col("label"))
-
-  /** [[KmeansIters]] Lloyd iterations over any (vec_id, embedding,
-    * label) frame from the given seed assignment — shared by the
-    * full-dimension coarse quantizer (label seed) and the per-subspace
-    * PQ codebooks (vec_id-hash seed, which sets the codebook size
-    * independently of label cardinality).
-    *
-    * Training runs on the [[TrainCap]]-bounded md5 sample; only the
-    * LAST assignment (the index encode) sweeps the full frame — so the
-    * per-iteration cost is corpus-size-independent while the returned
-    * (centroids, assignment) stay Voronoi-consistent over the whole
-    * corpus. Identical to unsampled training whenever the corpus fits
-    * the cap (every oracle-gated SF).
-    */
-  private def lloydOn(e: DataFrame, seed: Column): (DataFrame, DataFrame) =
-    lloydOnSplit(e, e, seed)
-
-  /** [[lloydOn]] with the training source and the encode (final
-    * assignment) source decoupled — the faiss add-after-train shape:
-    * quantizers train on one frame (the BASE corpus's md5 sample) while
-    * the index encode sweeps another (base ∪ later-arrived vectors).
-    * `lloydOn(e, seed)` is the `train == encode` special case.
-    */
-  private def lloydOnSplit(
-      trainSrc: DataFrame, encodeSrc: DataFrame,
-      seed: Column): (DataFrame, DataFrame) = {
-    val train = Out.eager(
-      trainSrc.orderBy(md5(col("vec_id").cast("string"))).limit(TrainCap))
-    var assigned = train.withColumn("cluster", seed)
-    var centroids: DataFrame = null
-    (1 to KmeansIters).foreach { i =>
-      LloydMeter.iterations.incrementAndGet()
-      centroids = centroidsOf(assigned)
-      // The FINAL centroid table is consumed twice by every build
-      // (written/scanned as the quantizer AND broadcast into the
-      // corpus-sized encode pass); lazily it carries the whole
-      // iteration chain, so each consumer re-ran every Lloyd step.
-      // Materialize the tiny k×dim table once (guide §1.2 don't
-      // recompute, §3.3 truncate grown plans) — the encode pass then
-      // broadcasts a checkpoint scan instead of the chain.
-      if (i == KmeansIters) centroids = Out.eager(centroids)
-      assigned = assignTo(if (i == KmeansIters) encodeSrc else train, centroids)
-    }
-    (centroids, assigned)
+      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = embDistributed(spark, dir)
+      .select(col("vec_id"), col("embedding"), col("label"))
+    coarse(trainSample(e), e)
   }
 
   /** Semantic dedup over the TRAINED quantizer cells (the SemDeDup
@@ -1139,99 +1198,6 @@ object VectorOps {
     * PQ uses 256). */
   val PqCodebooks = 32
 
-  /** The trained PQ index: per subspace, the final codebook
-    * (sub, code, centroid) and the corpus codes (vec_id, sub, code) —
-    * codes are Voronoi-consistent with the codebook they are scored
-    * against, exactly as in [[trainedIndex]].
-    *
-    * All [[PqSubspaces]] codebooks train JOINTLY: sub-vectors become
-    * rows keyed by `sub`, and each Lloyd step is ONE centroid aggregate
-    * + ONE broadcast-and-rank pass over the (vec_id, sub) rows —
-    * 2 shuffle pairs total, not 2 per subspace (the per-subspace
-    * composition ran 16 independent chains = 64 tiny stages whose
-    * scheduling latency dominated the query ~6×; the oracle unrolls
-    * per subspace, which is arithmetic-identical).
-    */
-  private def pqIndex(subs: DataFrame): (DataFrame, DataFrame) =
-    pqIndexSplit(subs, subs)
-
-  /** [[pqIndex]] with the codebook-training sub-rows and the encoded
-    * sub-rows decoupled (see [[lloydOnSplit]] — same add-after-train
-    * shape, per subspace).
-    */
-  private def pqIndexSplit(
-      trainSubs: DataFrame, encodeSubs: DataFrame): (DataFrame, DataFrame) = {
-    // codebooks train on the TrainCap-bounded md5 sample (whole-vector
-    // granularity: all of a sampled vector's sub-rows); only the final
-    // encode pass — the index build itself — sweeps the full corpus
-    val trainIds = trainSubs.select("vec_id").dropDuplicates("vec_id")
-      .orderBy(md5(col("vec_id").cast("string"))).limit(TrainCap)
-    val train = Out.eager(
-      trainSubs.join(broadcast(trainIds), Seq("vec_id"), "left_semi"))
-    var assigned = train.withColumn("cluster", col("vec_id") % PqCodebooks)
-    var cents: DataFrame = null
-    (1 to KmeansIters).foreach { i =>
-      LloydMeter.iterations.incrementAndGet()
-      cents = assigned
-        .select(col("sub"), col("cluster"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("sub", "cluster", "dim")
-        .agg(F.avgFromSums(sum(col("v").cast("decimal(25,10)")), count(lit(1))).as("c"))
-        .groupBy("sub", "cluster")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-          x => x.getField("c")).as("centroid"))
-      // final codebook table eager'd for the same reason as
-      // lloydOnSplit's final centroids: it is both written and
-      // broadcast into the corpus encode, and lazily each consumer
-      // re-ran the whole per-subspace Lloyd chain
-      if (i == KmeansIters) cents = Out.eager(cents)
-      // argmax as a hash aggregate (max of (sim, -cluster) structs) —
-      // the same highest-sim/ties-to-smaller-code pick as the rank-1
-      // window it replaced, but the codebook-fanned rows (k per
-      // sub-vector row) partial-aggregate map-side instead of feeding a
-      // corpus×k-row per-group Sort (guide §2.3: aggregate before the
-      // exchange). embedding is constant per (vec_id, sub).
-      assigned = (if (i == KmeansIters) encodeSubs else train)
-        .join(broadcast(cents), Seq("sub"))
-        .select(col("vec_id"), col("sub"), col("embedding"), col("cluster"),
-          F.roundHalfUp(dot(col("embedding"), col("centroid")), 6).as("sim"))
-        .groupBy("vec_id", "sub")
-        .agg(first(col("embedding")).as("embedding"),
-          max(struct(col("sim"), (-col("cluster")).as("negc"),
-            col("cluster"))).as("best"))
-        .select(col("vec_id"), col("sub"), col("embedding"),
-          col("best").getField("cluster").as("cluster"))
-    }
-    (cents.select(col("sub"), col("cluster").as("code"), col("centroid")),
-      assigned.select(col("vec_id"), col("sub"), col("cluster").as("code")))
-  }
-
-  /** Sub-vector rows (vec_id, sub, embedding) — eagerly materialized:
-    * they feed every Lloyd step and the code table (at warehouse scale
-    * this frame is the written PQ index).
-    */
-  private def pqSubs(spark: SparkSession, dir: String): DataFrame =
-    Out.eager(subsOf(spark, emb(spark, dir)))
-
-  /** Sub-vector rows of ANY (vec_id, embedding, …) frame — [[pqSubs]]
-    * for the whole corpus, and the per-frame form the split-trained
-    * index build ([[ivfPqPersistFrames]]) and the delta encode
-    * ([[ivfPqAddBatch]]) reuse. Lazy: a caller that reads the frame
-    * more than once (a Lloyd loop) checkpoints it itself.
-    */
-  private def subsOf(spark: SparkSession, e: DataFrame): DataFrame = {
-    val chunks = transform(sequence(lit(0), lit(PqSubspaces - 1)),
-      m => slice(col("embedding"), m * PqSubDim + 1, lit(PqSubDim)))
-    // Explicit spread: the encode pass is a map-side broadcast join
-    // over this frame, so its partition count IS the encode parallelism
-    // — a single-split scan would serialize the corpus × codebook
-    // argmin (measured 5.8 s -> 3.0 s wall on q_ann_pq at sf1,
-    // similarly IVF-PQ; on a real multi-split scan this collapses into
-    // the partitioning the downstream windows need anyway).
-    e.repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), posexplode(chunks).as(Seq("sub", "embedding")))
-  }
-
   /** Per-subspace dot LUT of every query against a PQ codebook frame. */
   private[graft] def pqLut(q: DataFrame, cents: DataFrame): DataFrame =
     q.crossJoin(broadcast(cents))
@@ -1265,8 +1231,9 @@ object VectorOps {
     * chains — hash-exact despite double quantization.
     */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, codes) = pqIndex(pqSubs(spark, dir))
-    val lut = pqLut(queries(emb(spark, dir)), cents)
+    val e = emb(spark, dir)
+    val (cents, codes) = pq(spark, trainSample(e), e)
+    val lut = pqLut(queries(e), cents)
     val r = adcRanked(codes.join(broadcast(lut), Seq("sub", "code"))
         .filter(col("vec_id") =!= col("q_id")))
       .filter(col("rank") <= TopKPq)
@@ -1322,9 +1289,9 @@ object VectorOps {
     */
   private[graft] def ivfPqRanked(
       spark: SparkSession, dir: String, ceiling: Long): DataFrame = {
-    val (coarseCents, assigned) = trainedIndex(spark, dir)
-    val (cents, codes) = pqIndex(pqSubs(spark, dir))
-    val probed = probeCells(queries(emb(spark, dir)), coarseCents, "cluster", 1)
+    val e = emb(spark, dir)
+    val ((coarseCents, assigned), (cents, codes)) = ivfPqIndex(spark, e, e)
+    val probed = probeCells(queries(e), coarseCents, "cluster", 1)
     val lut = pqLut(probed.select(col("q_id"), col("q_emb")), cents)
     val cand = assigned.select(col("vec_id"), col("cluster"))
       .join(broadcast(probed.select(col("q_id"), col("cluster"), col("cell_sim"))),
@@ -1457,20 +1424,8 @@ object VectorOps {
   private[graft] def ivfPqPersistFrames(
       spark: SparkSession, train: DataFrame, encode: DataFrame,
       base: String): Unit = withWriterLease(spark, base) {
-    def dist(f: DataFrame) = f
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val (coarseCents, assigned) =
-      lloydOnSplit(dist(train), dist(encode), col("label"))
-    // the Lloyd loop reads the exploded sub-vector frame once per
-    // step, so the build materializes it (a localCheckpoint job over
-    // the corpus); when the caller trains and encodes the SAME frame —
-    // every in-place build — reuse one materialization instead of
-    // paying the explode+checkpoint twice
-    def subs(f: DataFrame) = Out.eager(subsOf(spark, f))
-    val trainSubs = subs(train)
-    val encodeSubs = if (encode eq train) trainSubs else subs(encode)
-    val (cents, codes) = pqIndexSplit(trainSubs, encodeSubs)
+    val ((coarseCents, assigned), (cents, codes)) =
+      ivfPqIndex(spark, train, encode)
     coarseCents.write.mode("overwrite").parquet(s"$base/centroids")
     cents.write.mode("overwrite").parquet(s"$base/codebooks")
     codes.join(assigned.select(col("vec_id"), col("cluster").as("cell")),
@@ -1507,23 +1462,6 @@ object VectorOps {
   private def embDelta(spark: SparkSession, dir: String): DataFrame =
     embDistributed(spark, dir)
       .filter(col("vec_id") % AddModulus === AddResidue)
-
-  /** Encode sub-vector rows against a STORED codebook frame
-    * (sub, code, centroid) — the final [[pqIndexSplit]] assignment step
-    * with zero training: argmax rounded dot, ties to the smaller code.
-    */
-  private def encodeAgainst(subs: DataFrame, codebooks: DataFrame): DataFrame =
-    // argmax as a hash aggregate (max of (sim, -code) structs): highest
-    // sim, ties to the smaller code — identical to the rank-1 window it
-    // replaced, minus the per-group Sort of the k-fanned rows (§2.3).
-    subs.join(broadcast(codebooks), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("code"),
-        F.roundHalfUp(dot(col("embedding"), col("centroid")), 6).as("sim"))
-      .groupBy("vec_id", "sub")
-      .agg(max(struct(col("sim"), (-col("code")).as("negc"),
-        col("code"))).as("best"))
-      .select(col("vec_id"), col("sub"),
-        col("best").getField("code").as("code"))
 
   /** Incremental ADD to a persisted IVF-PQ index — the faiss
     * add-after-train half of the write_index lifecycle: a new-vector
@@ -1578,9 +1516,11 @@ object VectorOps {
     }
     val coarseCents = ParquetMeta.read(spark, s"$base/centroids")
     val codebooks = ParquetMeta.read(spark, s"$base/codebooks")
-    val cells = assignTo(delta, coarseCents)
+      .select(col("sub"), col("code").as("cluster"), col("centroid"))
+    val cells = assign(delta, coarseCents)
       .select(col("vec_id"), col("cluster").as("cell"))
-    val codes = encodeAgainst(subsOf(spark, delta), codebooks)
+    val codes = assign(subsOf(spread(spark, delta)), codebooks, Seq("sub"))
+      .select(col("vec_id"), col("sub"), col("cluster").as("code"))
     codes.join(cells, Seq("vec_id"))
       .repartition(col("cell")) // one delta file per cell, not tasks × cells
       .write.mode("overwrite").partitionBy("cell")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,12 +25,12 @@ object Ingest {
     * dropped (reference `pd.read_csv(sep=';', dtype=str,
     * on_bad_lines='skip')`, etl_sales.py:12-13).
     */
-  def readSemicolonCsv(spark: SparkSession, path: String): DataFrame =
+  def readSemicolonCsv(spark: SparkSession, paths: String*): DataFrame =
     spark.read
       .option("sep", ";")
       .option("header", "true")
       .option("mode", "DROPMALFORMED")
-      .csv(path)
+      .csv(paths: _*)
 
   /** P1 — header normalization: trim, lowercase, whitespace→underscore
     * (reference etl_sales.py:45).
@@ -67,14 +68,33 @@ object Ingest {
     * listing — file metadata, not data, so it stays O(files) on the
     * driver at any data scale.
     */
-  def newestFile(spark: SparkSession, globPath: String): Option[String] = {
-    val path = new org.apache.hadoop.fs.Path(globPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-    statuses.filter(_.isFile)
+  def newestFile(spark: SparkSession, globPath: String): Option[String] =
+    globStatus(spark, globPath).filter(_.isFile)
       .sortBy(s => (s.getModificationTime, s.getPath.toString))
       .lastOption.map(_.getPath.toString)
+
+  /** Every path matching `glob`, listed on the driver (file metadata,
+    * not data) and sorted by path; empty when nothing matches. Glob
+    * readers hand Spark these paths ([[globPaths]]) instead of the
+    * pattern: given a pattern, Spark's `FileStreamSink.hasMetadata`
+    * stats it as a literal path first, which fails and logs a
+    * FileNotFoundException stack on every read.
+    */
+  def globStatus(spark: SparkSession, glob: String): Seq[FileStatus] = {
+    val path = new Path(glob)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    Option(fs.globStatus(path)).toSeq.flatten.sortBy(_.getPath.toString)
   }
+
+  /** The Spark read paths of `glob`: its [[globStatus]] matches, or the
+    * pattern itself when nothing matches, so an empty match fails the
+    * read with Spark's usual path-not-found error.
+    */
+  def globPaths(spark: SparkSession, glob: String): Seq[String] =
+    globStatus(spark, glob).map(_.getPath.toString) match {
+      case Seq() => Seq(glob)
+      case paths => paths
+    }
 
   /** S5 — typed CSV reader (reference etl_stock.py:16): explicit schema,
     * no inference pass (an inference pass is a full extra scan at scale).
@@ -100,7 +120,7 @@ object Ingest {
       .schema("page_number INT, total_pages INT, total_count INT, " +
         "data ARRAY<STRUCT<order_id: BIGINT, state: STRING, total_price: DOUBLE>>")
       .option("multiLine", "true")
-      .json(glob)
+      .json(globPaths(spark, glob): _*)
 
   /** S8 — page-chain reassembly with integrity flags: explode every
     * landed page's items and stamp each row with whether the page chain

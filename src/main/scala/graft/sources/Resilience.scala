@@ -48,7 +48,7 @@ object Resilience {
     } finally out.close()
     val scanned = spark.read
       .option("ignoreCorruptFiles", "true")
-      .parquet(s"$base/shard_*/part-*.parquet")
+      .parquet(Ingest.globPaths(spark, s"$base/shard_*/part-*.parquet"): _*)
     val r = scanned.groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         graft.functions.F.sumDecAsDouble(col("o_totalprice"), 4).as("total"))

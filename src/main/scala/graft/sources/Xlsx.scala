@@ -41,10 +41,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     Serials < 61 fall in Excel's 1900-leap-bug region and are not
   *     adjusted; modern exports start at ~45000.
   *
-  * Distribution: [[Excel.readXlsx]] lists the glob on the driver only to
-  * read ONE header row, then hands the files to Spark's `binaryFile`
-  * source — each workbook parses on an executor. A zip is not
-  * splittable, so the parallel grain is one task per file: exactly right
+  * Distribution: [[Excel.readXlsx]] lists the glob on the driver once
+  * ([[Ingest.globStatus]]) to read ONE header row, then hands the listed
+  * files to Spark's `binaryFile` source — each workbook parses on an
+  * executor. A zip is not splittable, so the parallel grain is one task
+  * per file: exactly right
   * for the many-small-workbooks landing directory the reference globs
   * (`*orders*.xlsx`), and at cluster scale thousands of files fan out
   * across executors with zero shuffle.
@@ -475,11 +476,10 @@ object Excel {
     * distributed on the `binaryFile` source.
     */
   def readXlsx(spark: SparkSession, glob: String): DataFrame = {
-    val gpath = new Path(glob)
-    val fs = gpath.getFileSystem(spark.sessionState.newHadoopConf())
-    val matches = Option(fs.globStatus(gpath)).map(_.toSeq).getOrElse(Seq.empty)
+    val matches = Ingest.globStatus(spark, glob).map(_.getPath)
     require(matches.nonEmpty, s"no .xlsx matches $glob")
-    val firstPath = matches.map(_.getPath).minBy(_.getName)
+    val firstPath = matches.minBy(_.getName)
+    val fs = firstPath.getFileSystem(spark.sessionState.newHadoopConf())
 
     val headerBytes = {
       val in = fs.open(firstPath)
@@ -495,7 +495,7 @@ object Excel {
         Seq(StructField("_file", StringType, nullable = false),
           StructField("_row", LongType, nullable = false)))
 
-    spark.read.format("binaryFile").load(glob)
+    spark.read.format("binaryFile").load(matches.map(_.toString): _*)
       .select("path", "content")
       .flatMap { fileRow =>
         val path = fileRow.getString(0)

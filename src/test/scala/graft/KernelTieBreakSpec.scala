@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VectorOps
 
-/** Tie-breaks of the ANN probe-and-rank kernel, on hand-made frames
-  * with exact ties (the catalog corpus ties only where it happens to):
-  * a cell_sim tie probes the smaller cell id, a similarity tie ranks
-  * the smaller neighbor_id first, and both restart for every q_id.
-  * Rows are listed larger-id first, so input order cannot pass for the
-  * tie-break.
+/** Tie-breaks of the ANN probe-and-rank kernel and of the quantizer
+  * kernel's assign, on hand-made frames with exact ties (the catalog
+  * corpus ties only where it happens to): a cell_sim tie probes the
+  * smaller cell id, a similarity tie ranks the smaller neighbor_id
+  * first, both restart for every q_id, and an assign tie goes to the
+  * smaller centroid id per (vec_id, key…). Rows are listed larger-id
+  * first, so input order cannot pass for the tie-break.
   */
 class KernelTieBreakSpec extends AnyFunSuite {
   private lazy val spark = SparkT.spark
@@ -57,5 +58,34 @@ class KernelTieBreakSpec extends AnyFunSuite {
     assert(ranks(None) == Set(
       (0L, 1, 6L), (0L, 2, 4L), (0L, 3, 9L), (0L, 4, 2L),
       (1L, 1, 3L), (1L, 2, 8L)))
+  }
+
+  // unkeyed: (1, 0) ties clusters 7 and 3 at 0.5; (0, 1) ties 7 and 5;
+  // (0.6, 0.8) has the single best 7 at 0.7. Keyed by sub: (1, 0) ties
+  // codes 9 and 2 in sub 0 but 8 and 1 in sub 1; (0, 1) ties 9 and 6 in
+  // sub 0 but 8 and 4 in sub 1
+  test("assign: a tie goes to the smaller id, unkeyed and per (vec_id, sub)") {
+    import spark.implicits._
+    val rows = Seq((9L, Array(0.6, 0.8)), (4L, Array(0.0, 1.0)),
+      (2L, Array(1.0, 0.0))).toDF("vec_id", "embedding")
+    val cells = VectorOps.assign(rows, cents.withColumnRenamed("cell", "cluster"),
+        carry = Seq("sim")).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cluster"),
+        r.getAs[Double]("sim")))
+      .toSet
+    assert(cells == Set((9L, 7, 0.7), (4L, 5, 0.5), (2L, 3, 0.5)))
+
+    val subs = Seq((1L, 1, Array(0.0, 1.0)), (1L, 0, Array(1.0, 0.0)),
+      (0L, 1, Array(1.0, 0.0)), (0L, 0, Array(0.0, 1.0)))
+      .toDF("vec_id", "sub", "embedding")
+    val codebooks = Seq(
+      (1, 8, Array(0.5, 0.5)), (1, 4, Array(-0.5, 0.5)), (1, 1, Array(0.5, -0.5)),
+      (0, 9, Array(0.5, 0.5)), (0, 6, Array(-0.5, 0.5)), (0, 2, Array(0.5, -0.5)))
+      .toDF("sub", "cluster", "centroid")
+    val codes = VectorOps.assign(subs, codebooks, Seq("sub")).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
+        r.getAs[Int]("cluster")))
+      .toSet
+    assert(codes == Set((1L, 1, 4), (1L, 0, 2), (0L, 1, 1), (0L, 0, 6)))
   }
 }

@@ -20,12 +20,13 @@ class ResilienceSpec extends AnyFunSuite {
     val full = Tables.load(spark, SparkT.Sf0001, "orders").count()
     assert(nTolerant > 0 && nTolerant < full,
       "tolerant scan must surface the intact slices only")
-    // the same glob WITHOUT ignoreCorruptFiles must fail on the torn shard
+    // the same files WITHOUT ignoreCorruptFiles must fail on the torn shard
     val base = java.nio.file.Files.list(
         java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
       .toArray.map(_.toString).filter(_.contains("graft_corrupt_scan_")).head
     intercept[org.apache.spark.SparkException] {
-      spark.read.parquet(s"$base/shard_*/part-*.parquet").count()
+      spark.read.parquet(
+        graft.sources.Ingest.globPaths(spark, s"$base/shard_*/part-*.parquet"): _*).count()
     }
   }
 
